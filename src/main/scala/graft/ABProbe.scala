@@ -28,17 +28,6 @@ object ABProbe {
     // A/A noise-floor check and must keep two independent buffers
     val timings = names.map(n =>
       n -> scala.collection.mutable.ArrayBuffer.empty[Double])
-    // Bench.quiesce's discipline between timed runs: blocking
-    // unpersist, stop straggling streams (the stream gates ARE
-    // probe-able here), settle the heap — otherwise arm A's leftovers
-    // are billed to arm B on a fixed round-robin order, a SYSTEMATIC
-    // bias in exactly the delta this tool measures
-    def quiesce(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      try spark.streams.active.foreach(_.stop())
-      catch { case _: Throwable => () }
-      System.gc()
-    }
     // one untimed warmup pass (plan compile + codegen + footers)
     names.foreach { n =>
       SparkEntry.queries(n)(spark, sfDir).write.format("noop")
@@ -46,7 +35,10 @@ object ABProbe {
     }
     (1 to rounds).foreach { r =>
       timings.foreach { case (n, buf) =>
-        quiesce()
+        // Bench.quiesce between timed runs — otherwise arm A's
+        // leftovers are billed to arm B on a fixed round-robin order,
+        // a SYSTEMATIC bias in exactly the delta this tool measures
+        Bench.quiesce(spark)
         val t0 = System.nanoTime()
         SparkEntry.queries(n)(spark, sfDir).write.format("noop")
           .mode("overwrite").save()

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR, writes per-query wall-clock seconds to a JSON
@@ -255,6 +256,20 @@ object Bench {
       case _ => prevMin
     }
 
+  /** Run isolation between timed runs, shared by every measurement
+    * main: drop checkpointed/cached RDD blocks, stop any straggling
+    * streams, and settle the heap so one run's garbage isn't billed
+    * to the next. The unpersist is blocking: the non-blocking form
+    * only ENQUEUES block removal, so the gc() would run while pinned
+    * blocks are still referenced. stop() can throw on a wedged stream
+    * and must not lose timings; fatal errors still propagate. */
+  private[graft] def quiesce(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    try spark.streams.active.foreach(_.stop())
+    catch { case NonFatal(_) => () }
+    System.gc()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -322,21 +337,6 @@ object Bench {
       try Tables(spark, sfDir, n).limit(1).write.format("noop")
         .mode("overwrite").save()
       catch { case _: Throwable => () })
-
-    // isolate queries/iterations from each other: drop checkpointed/
-    // cached RDD blocks, stop any straggling streams, and settle the
-    // heap so one run's garbage isn't billed to the next. stop() can
-    // throw/time out on a wedged stream and must not lose timings.
-    def quiesce(): Unit = {
-      // blocking unpersist: the non-blocking form only ENQUEUES block
-      // removal, so the gc() below would run while multi-GB pinned
-      // blocks are still referenced and the next timed run inherits
-      // the memory pressure this quiesce exists to prevent
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      try spark.streams.active.foreach(_.stop())
-      catch { case _: Throwable => () }
-      System.gc()
-    }
 
     // previous round's per-query minima (the file this run will
     // overwrite) — the reference for the regression re-run rule. A
@@ -434,7 +434,7 @@ object Bench {
             System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
           }
         val sec = (System.nanoTime() - t0) / 1e9
-        quiesce()
+        quiesce(spark)
         if (ok) Some(sec) else None
       }
       val base = run(iters)

@@ -50,23 +50,16 @@ object ScaleProbe {
     require(unknown.isEmpty,
       s"unknown probe name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     val wanted = if (args.isEmpty) probes.keys.toSeq.sorted else args.toSeq
-    // run isolation between iterations, same discipline as Bench's
-    // quiesce: the approx-prune body PINS (localCheckpoints) its
-    // margins frame per invocation, so without an unpersist each
-    // min-of-N iteration would start with the previous iterations'
-    // blocks still resident — later iterations inherit the memory
-    // pressure and the storage leaks until session exit
-    def quiesce(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
-    }
     val results = wanted.map { name =>
       val secs = (1 to iters).map { _ =>
         val t0 = System.nanoTime()
         probes(name)(spark, sfDir).write.format("noop")
           .mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
-        quiesce()
+        // run isolation: the approx-prune body PINS (localCheckpoints)
+        // its margins frame per invocation, so without an unpersist
+        // later iterations inherit the earlier ones' resident blocks
+        Bench.quiesce(spark)
         sec
       }
       name -> math.round(secs.min * 100) / 100.0

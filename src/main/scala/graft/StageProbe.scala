@@ -57,17 +57,11 @@ object StageProbe {
           m.shuffleReadMetrics.fetchWaitTime))
       }
     }
-    def quiesce(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      try spark.streams.active.foreach(_.stop())
-      catch { case _: Throwable => () }
-      System.gc()
-    }
     args.foreach { name =>
       // untimed warmup (codegen, footers)
       SparkEntry.queries(name)(spark, sfDir).write.format("noop")
         .mode("overwrite").save()
-      quiesce()
+      Bench.quiesce(spark)
       stages.clear(); jobs.clear(); stageToJob.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
@@ -77,14 +71,17 @@ object StageProbe {
       // listener-bus drain before reading (the bus is private API, so
       // poll the observed stage count for stability instead of a fixed
       // sleep — a loaded box could deliver late StageCompleted events
-      // past any constant window and silently underreport, r21 advice)
-      var drained = false
-      var lastSize = -1
+      // past any constant window and silently underreport): drained
+      // means two consecutive stable 150 ms windows (so >= 300 ms
+      // waited), capped at 5 s
+      var stableWindows = 0
+      var lastSize = stages.size()
       var waitedMs = 0L
-      while (!drained && waitedMs < 5000L) {
+      while (stableWindows < 2 && waitedMs < 5000L) {
+        Thread.sleep(150); waitedMs += 150
         val size = stages.size()
-        if (size == lastSize) drained = true
-        else { lastSize = size; Thread.sleep(150); waitedMs += 150 }
+        stableWindows = if (size == lastSize) stableWindows + 1 else 0
+        lastSize = size
       }
       spark.sparkContext.removeSparkListener(listener)
       import scala.jdk.CollectionConverters._
@@ -103,7 +100,7 @@ object StageProbe {
           f"in ${r.inputB / 1e6}%7.1fMB sr ${r.shufReadB / 1e6}%6.1fMB " +
           f"sw ${r.shufWriteB / 1e6}%6.1fMB  ${r.name}")
       }
-      quiesce()
+      Bench.quiesce(spark)
     }
     spark.stop()
   }

@@ -2,7 +2,7 @@ package graft.imdb
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Continuous `transfer`: the reference's batch-only TSV ingest
@@ -39,15 +39,10 @@ object StreamingTransfer {
     * appending parquet at `outPath` with checkpointed progress. */
   def runOnce(
       spark: SparkSession, folder: String, dataset: ImdbDataset,
-      outPath: String, checkpoint: String): StreamingQuery = {
-    val q = stream(spark, folder, dataset).writeStream
+      outPath: String, checkpoint: String): StreamingQuery =
+    graft.streaming.EventStreams.drain(stream(spark, folder, dataset).writeStream
       .format("parquet")
       .option("path", outPath)
       .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      .outputMode("append"))
 }

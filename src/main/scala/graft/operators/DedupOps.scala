@@ -105,24 +105,27 @@ object DedupOps {
     * heuristic (guide §5 — the driver does no data work). */
   private[operators] val FooterProbeMaxFiles = 64
 
-  /** Row-group count of one parquet file, memoized by (path, length)
-    * — the same footer the scan reads once for schema/stats, so a
-    * repeat spread() over the same immutable fixture costs nothing.
-    * None when the footer cannot be read (not parquet after all,
-    * permissions): the caller falls back to byte math for that file. */
+  /** Row-group count of one parquet file, memoized by (path, length,
+    * modification time) off the scan's cached listing — the same
+    * footer the scan reads once for schema/stats, so a repeat spread()
+    * over the same immutable fixture costs nothing, while a file
+    * rewritten in place (same length or not) gets a new mtime and is
+    * re-probed. None when the footer cannot be read (not parquet after
+    * all, permissions): the caller falls back to byte math for that
+    * file. */
   private val rowGroupCounts =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
-  private def parquetRowGroups(
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Long]()
+  private[operators] def parquetRowGroups(
       spark: org.apache.spark.sql.SparkSession,
-      path: String, len: Long): Option[Long] =
-    try Some(rowGroupCounts.computeIfAbsent((path, len), { _ =>
+      f: org.apache.hadoop.fs.FileStatus): Option[Long] =
+    try Some(rowGroupCounts.computeIfAbsent(
+        (f.getPath.toString, f.getLen, f.getModificationTime), { _ =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path),
-        spark.sparkContext.hadoopConfiguration)
+        f.getPath, spark.sparkContext.hadoopConfiguration)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getRowGroups.size.toLong finally r.close()
     }))
-    catch { case _: Throwable => None }
+    catch { case scala.util.control.NonFatal(_) => None }
 
   private[operators] def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -153,26 +156,27 @@ object DedupOps {
       // partition, it does not flip the whole corpus to #files (which
       // overestimated and skipped the repartition this guard exists
       // to trigger)
-      val perFile: Seq[(String, Long)] = df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          l.relation
-      }.collect {
-        case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-          h.location.listFiles(Nil, Nil).flatMap(pd =>
-            pd.files.map(f => (f.getPath.toString, f.getLen)))
-      }.flatten
+      val perFile: Seq[org.apache.hadoop.fs.FileStatus] =
+        df.queryExecution.analyzed.collect {
+          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+            l.relation
+        }.collect {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.location.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
+        }.flatten
+      def padded(fs: Seq[org.apache.hadoop.fs.FileStatus]): Long =
+        fs.map(f => BigInt(f.getLen) + openCost).sum
+          .min(BigInt(Long.MaxValue)).toLong
       val estSplits =
         if (perFile.nonEmpty) {
           // Spark sizes splits from the WHOLE listing's padded bytes
           // (FilePartition.maxSplitBytes), then bin-packs; compressed
           // files are one task each regardless of size
-          val totalPadded = perFile.map { case (_, len) =>
-            BigInt(len) + openCost }.sum.min(BigInt(Long.MaxValue)).toLong
           val maxSplit = math.min(maxPartBytes,
-            math.max(openCost, totalPadded / math.max(1, parallelism)))
-          val (comp, spl) = perFile.partition(f => !splittable(f._1))
-          val splPadded = spl.map { case (_, len) => BigInt(len) + openCost }
-            .sum.min(BigInt(Long.MaxValue)).toLong
+            math.max(openCost, padded(perFile) / math.max(1, parallelism)))
+          val (comp, spl) =
+            perFile.partition(f => !splittable(f.getPath.getName))
+          val splPadded = padded(spl)
           // packed-bin floor, not ceil — packing fills bins to
           // maxSplit, so the fractional bin folds into the last one;
           // erring low just repartitions near the threshold
@@ -191,25 +195,23 @@ object DedupOps {
           // (byte estimate says "enough splits"), only for parquet
           // files, only up to FooterProbeMaxFiles (beyond that the
           // file count alone is real capacity), and each footer read
-          // is memoized by (path, length) — reading a footer is the
+          // is memoized by (path, length, mtime) — reading a footer is the
           // same bounded metadata I/O the scan itself already did.
           if (byBytes < math.max(2, parallelism / 2)) byBytes
           else {
             val (parq, other) = spl.partition(
-              _._1.toLowerCase.endsWith(".parquet"))
+              _.getPath.getName.toLowerCase.endsWith(".parquet"))
             if (parq.isEmpty || spl.length > FooterProbeMaxFiles) byBytes
             else {
-              val otherPadded = other.map { case (_, len) =>
-                BigInt(len) + openCost }.sum.min(BigInt(Long.MaxValue)).toLong
               val capacity = comp.length.toLong +
                 (if (other.isEmpty) 0L
-                 else math.max(1L, otherPadded / math.max(1L, maxSplit))) +
-                parq.map { case (p, len) =>
-                  parquetRowGroups(spark, p, len).getOrElse(
+                 else math.max(1L, padded(other) / math.max(1L, maxSplit))) +
+                parq.map { f =>
+                  parquetRowGroups(spark, f).getOrElse(
                     // unreadable footer: fall back to this file's
                     // byte-math contribution rather than failing the
                     // estimate (the scan will surface a real error)
-                    math.max(1L, (len + openCost) / math.max(1L, maxSplit)))
+                    math.max(1L, (f.getLen + openCost) / math.max(1L, maxSplit)))
                 }.sum
               math.min(byBytes, capacity)
             }
@@ -821,9 +823,11 @@ object DedupOps {
     // general path's: matched endpoints contribute their stored
     // label, unmatched ones themselves (the coalesce), so the
     // touched/untouched partition — and everything downstream — is
-    // unchanged. Longs only (production doc ids; anything else keeps
-    // the general path authoritative, the localComponents rule).
-    val localOk = edges.schema.fields.forall(
+    // unchanged. Longs only, on BOTH the edges and the prior state
+    // (the local path reads each with getLong; production doc ids are
+    // longs, anything else keeps the general path authoritative, the
+    // localComponents rule).
+    val localOk = (edges.schema.fields ++ prevStars.schema.fields).forall(
       _.dataType == org.apache.spark.sql.types.LongType)
     val probe: Option[Array[org.apache.spark.sql.Row]] =
       if (!localOk) None

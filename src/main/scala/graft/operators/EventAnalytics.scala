@@ -55,6 +55,14 @@ object EventAnalytics {
         col("ts_us"))).as("s3"))
   }
 
+  /** [[funnelSql]]'s four counts over a per-user (s1, s2, s3) stage
+    * table — shared by the batch funnel and both streaming twins. */
+  private[operators] def funnelCounts(stages: DataFrame): DataFrame =
+    stages.agg(count(lit(1)).as("n_users"),
+      count(col("s1")).as("n_signup"),
+      count(col("s2")).as("n_view_after_signup"),
+      count(col("s3")).as("n_purchase_after_view"))
+
   /** Count-Min sketch geometry: [[CmDepth]] pairwise-independent-ish
     * hash rows of [[CmWidth]] buckets, hashes h_i(k) = ((k·A_i + B_i)
     * mod [[CmP]]) mod [[CmWidth]] — plain integer arithmetic, so both
@@ -450,13 +458,7 @@ object EventAnalytics {
     },
 
     QueryDef.sql("q_funnel", funnelSql) {
-      (s, dir) =>
-        funnelStages(Tables.events(s, dir))
-          .agg(
-            count(lit(1)).as("n_users"),
-            count(col("s1")).as("n_signup"),
-            count(col("s2")).as("n_view_after_signup"),
-            count(col("s3")).as("n_purchase_after_view"))
+      (s, dir) => funnelCounts(funnelStages(Tables.events(s, dir)))
     },
 
     // Ingest-volume anomaly screen: per-type hourly event counts

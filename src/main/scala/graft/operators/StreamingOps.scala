@@ -2,15 +2,21 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.streaming.EventStreams
+import graft.streaming.EventStreams.{drain, slicedStream, tableStream, toMemory}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-/** Streaming operators exposed to the correctness gate. The windowed
-  * aggregation runs as a REAL Structured Streaming query (file source
-  * → memory sink, Trigger.AvailableNow) and is oracle-checked against
-  * the equivalent batch SQL — proving batch/stream agreement, not just
-  * that a stream ran. Sessionization's batch twin is oracle-checked
-  * here; the stateful streaming twin is pinned to it in the test suite.
+/** Streaming operators exposed to the correctness gate. Each stream
+  * gate is a [[streamGate]] (state partitions capped for the run) whose
+  * body builds a REAL Structured Streaming query over a staged file
+  * source ([[EventStreams.slicedStream]] / [[EventStreams.tableStream]])
+  * and runs it through the one AvailableNow runner —
+  * [[EventStreams.toMemory]] for memory-sink gates,
+  * [[EventStreams.drain]] for foreachBatch and file sinks. Every gate
+  * is oracle-checked against the equivalent batch SQL — proving
+  * batch/stream agreement, not just that a stream ran.
+  * Sessionization's batch twin is oracle-checked here; the stateful
+  * streaming twin is pinned to it in the test suite.
   */
 object StreamingOps {
 
@@ -31,9 +37,8 @@ object StreamingOps {
     * stateful operator — post map-side combine, one partial row per
     * (scan partition, window) — so for single-partition slices it is
     * the number of DISTINCT dropped windows, not dropped input rows. */
-  private[graft] def runLateData(
-      s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, Long) = withStreamPartitions(s, 8) {
+  private[graft] def runLateData(s: SparkSession, dir: String)
+      : (DataFrame, Long) = withStatePartitions(s, 8) {
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("ts_us"), col("value"))
     // bounded 1-row scalar (the q_stream_drift midpoint pattern):
@@ -46,9 +51,7 @@ object StreamingOps {
       ev.filter(delayed && col("event_id") % 2 === 0), // wave 1
       ev.filter(delayed && col("event_id") % 2 === 1), // wave 2
       ev.filter(lit(false)))) // flush: final eviction trigger
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = stream
+    val q = drain(slicedStream(s, ev.schema, inDir)
       .withColumn("event_time", timestamp_micros(col("ts_us")))
       .withWatermark("event_time", "72 hours")
       .groupBy(window(col("event_time"), "1 day"))
@@ -57,8 +60,7 @@ object StreamingOps {
       .select(unix_micros(col("window.start")).as("window_start_us"),
         col("n_events"), col("cents"))
       .writeStream.format("memory").queryName("graft_stream_late")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      .outputMode("append"))
     val drops = q.recentProgress.toSeq
       .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
       .map(_.numRowsDroppedByWatermark).sum
@@ -75,29 +77,33 @@ object StreamingOps {
     * state partitions and restore the session conf afterwards. At
     * production scale this is the knob you RAISE per sink throughput.
     */
-  private def withStreamPartitions[T](
-      s: org.apache.spark.sql.SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, math.min(n, prev.toInt).toString)
-    try body finally s.conf.set(key, prev)
+  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T =
+    withConf(s, "spark.sql.shuffle.partitions")(
+      p => math.min(n, p.toInt).toString)(body)
+
+  /** transformWithState requires the RocksDB state-store provider. */
+  private def withRocksDbProvider[T](s: SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.streaming.stateStore.providerClass")(_ =>
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
+  /** Set `key` to `value(current)` for `body`, then restore the prior
+    * setting (unset if it was unset) — the one set/try/restore
+    * discipline for every conf a stream gate pins. */
+  private def withConf[T](s: SparkSession, key: String)(
+      value: String => String)(body: => T): T = {
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value(s.conf.get(key)))
+    try body finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
   }
 
-  /** Pin the RocksDB state-store provider for `body` and restore the
-    * prior setting after — transformWithState requires it, and the
-    * one set/try/restore discipline lives here so the TWS gates
-    * cannot drift apart on the restore logic. */
-  private def withRocksDbProvider[T](
-      s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
+  /** A stream gate: `body` runs with its state partitions capped at
+    * `statePartitions` ([[withStatePartitions]]). */
+  private def streamGate(name: String, oracle: String,
+      statePartitions: Int = 8)(
+      body: (SparkSession, String) => DataFrame): QueryDef =
+    QueryDef.sql(name, oracle) { (s, dir) =>
+      withStatePartitions(s, statePartitions)(body(s, dir))
     }
-  }
 
   /** One q_stream_topk leaderboard maintenance round: merge a
     * trigger's UPDATED cumulative counts into the prior k-row board
@@ -110,7 +116,7 @@ object StreamingOps {
     * row — and then it IS in the candidate set. The election is
     * orderBy+limit (TakeOrderedAndProject); the collect is k rows. */
   def topkBoardMerge(prior: Seq[(Long, Long)],
-      updates: org.apache.spark.sql.DataFrame, k: Int): Array[(Long, Long)] = {
+      updates: DataFrame, k: Int): Array[(Long, Long)] = {
     val s = updates.sparkSession
     import s.implicits._
     updates.select(col("user_id"), col("cnt"))
@@ -123,21 +129,13 @@ object StreamingOps {
 
   val all: Seq[QueryDef] = Seq(
 
-    QueryDef.sql(
+    streamGate(
       "q_stream_window",
       """SELECT epoch_us(time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP))) AS window_start_us,
         |       event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val schema = Tables(s, dir, "events").schema
-        val stream = s.readStream.schema(schema)
-          .parquet(EventStreams.streamableDir(s"$dir/events.parquet"))
-        val q = EventStreams.windowedAgg(stream)
-          .writeStream.format("memory").queryName("graft_stream_window")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_window")
-      }
+        |FROM events GROUP BY 1, 2""".stripMargin) { (s, dir) =>
+      toMemory(EventStreams.windowedAgg(tableStream(s, dir, "events")),
+        "graft_stream_window", "complete")
     },
 
     // WATERMARK LATE-DATA ACCOUNTING — the semantics every production
@@ -197,24 +195,16 @@ object StreamingOps {
     // Stream-stream interval join run as a REAL streaming query; for
     // finite one-shot input the inner join's eager emission makes the
     // result identical to the batch join — which is the oracle.
-    QueryDef.sql(
+    streamGate(
       "q_stream_join",
       """SELECT p.user_id, p.event_id AS purchase_id, v.event_id AS view_id
         |FROM events p JOIN events v
         |  ON v.user_id = p.user_id
         | AND p.event_type = 'purchase' AND v.event_type = 'view'
         | AND epoch_us(v.ts) <= epoch_us(p.ts)
-        | AND epoch_us(v.ts) >= epoch_us(p.ts) - 3600000000""".stripMargin) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val schema = Tables(s, dir, "events").schema
-        def stream = s.readStream.schema(schema)
-          .parquet(EventStreams.streamableDir(s"$dir/events.parquet"))
-        val q = EventStreams.purchasesJoinViews(stream)
-          .writeStream.format("memory").queryName("graft_stream_join")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_join")
-      }
+        | AND epoch_us(v.ts) >= epoch_us(p.ts) - 3600000000""".stripMargin) { (s, dir) =>
+      toMemory(EventStreams.purchasesJoinViews(tableStream(s, dir, "events")),
+        "graft_stream_join", "append")
     },
 
     // Streaming ingest dedup as a REAL streaming run: watermarked
@@ -222,38 +212,22 @@ object StreamingOps {
     // batch DISTINCT (the whole point of exactly-once ingest dedup).
     // Finite one-shot input lands in a single micro-batch, so no key
     // can expire mid-run and the stream output IS the exact distinct.
-    QueryDef.sql(
+    streamGate(
       "q_stream_dedup",
-      "SELECT DISTINCT user_id, event_type FROM events") {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val schema = Tables(s, dir, "events").schema
-        val stream = s.readStream.schema(schema)
-          .parquet(EventStreams.streamableDir(s"$dir/events.parquet"))
-        val q = EventStreams.dedupKeysStream(stream)
-          .writeStream.format("memory").queryName("graft_stream_dedup")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_dedup")
-      }
+      "SELECT DISTINCT user_id, event_type FROM events") { (s, dir) =>
+      toMemory(EventStreams.dedupKeysStream(tableStream(s, dir, "events")),
+        "graft_stream_dedup", "append")
     },
 
     // Stream-static dimension enrichment as a REAL streaming run: the
     // stateless broadcast-lookup shape (no state store, dimension
     // probed map-side per micro-batch). Oracle = the batch equi-join.
-    QueryDef.sql(
+    streamGate(
       "q_stream_enrich",
       """SELECT e.event_id, e.user_id, c.c_mktsegment AS segment, e.event_type
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey""".stripMargin) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val schema = Tables(s, dir, "events").schema
-        val stream = s.readStream.schema(schema)
-          .parquet(EventStreams.streamableDir(s"$dir/events.parquet"))
-        val q = EventStreams.enrichWithDim(stream, Tables(s, dir, "customer"))
-          .writeStream.format("memory").queryName("graft_stream_enrich")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_enrich")
-      }
+        |FROM events e JOIN customer c ON e.user_id = c.c_custkey""".stripMargin) { (s, dir) =>
+      toMemory(EventStreams.enrichWithDim(tableStream(s, dir, "events"),
+        Tables(s, dir, "customer")), "graft_stream_enrich", "append")
     },
 
     // Streaming corpus ingest screen at paragraph granularity, as a
@@ -270,31 +244,22 @@ object StreamingOps {
     // alone, and the stored side's bucketed layout replaces its
     // exchange (spec-proven like the band index). Oracle = the batch
     // semi-join.
-    QueryDef.sql(
+    streamGate(
       "q_stream_ingest_screen",
       s"""WITH ${DedupOps.paragraphCtesSql},
          |c AS (SELECT DISTINCT h FROM c2 WHERE doc_id < ${DedupOps.IncrementalSplit})
          |SELECT DISTINCT doc_id FROM c2
-         |WHERE doc_id >= ${DedupOps.IncrementalSplit} AND h IN (SELECT h FROM c)""".stripMargin) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        DedupOps.writeParagraphIndex(
-          Tables(s, dir, "documents")
-            .filter(col("doc_id") < DedupOps.IncrementalSplit),
-          "graft_para_index", 8)
-        val corpusIdx = s.table("graft_para_index")
-        val schema = Tables(s, dir, "documents").schema
-        val stream = s.readStream.schema(schema)
-          .parquet(EventStreams.streamableDir(s"$dir/documents.parquet"))
-          .filter(col("doc_id") >= DedupOps.IncrementalSplit)
-        val q = DedupOps.paragraphHashes(stream)
-          .join(corpusIdx, Seq("h"), "left_semi")
-          .select(col("doc_id"))
-          .dropDuplicates("doc_id")
-          .writeStream.format("memory").queryName("graft_stream_screen")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_screen")
-      }
+         |WHERE doc_id >= ${DedupOps.IncrementalSplit} AND h IN (SELECT h FROM c)""".stripMargin) { (s, dir) =>
+      DedupOps.writeParagraphIndex(
+        Tables(s, dir, "documents")
+          .filter(col("doc_id") < DedupOps.IncrementalSplit),
+        "graft_para_index", 8)
+      val stream = tableStream(s, dir, "documents")
+        .filter(col("doc_id") >= DedupOps.IncrementalSplit)
+      toMemory(DedupOps.paragraphHashes(stream)
+        .join(s.table("graft_para_index"), Seq("h"), "left_semi")
+        .select(col("doc_id"))
+        .dropDuplicates("doc_id"), "graft_stream_screen", "append")
     },
 
     // Streaming Count-Min sketch maintenance as a REAL multi-batch
@@ -308,30 +273,22 @@ object StreamingOps {
     // watermark, this state is BOUNDED BY SKETCH GEOMETRY (d·w cells,
     // 192 here) whatever the key cardinality — the screen you can
     // afford to keep on an unbounded ingest firehose.
-    QueryDef.sql(
+    streamGate(
       "q_stream_cm",
       s"""WITH ${EventAnalytics.cmBucketsCte}
          |SELECT CAST(i AS INTEGER) AS i, bucket,
          |       CAST(count(*) AS BIGINT) AS c
-         |FROM b GROUP BY 1, 2""".stripMargin) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val ev = Tables.events(s, dir).select(col("user_id"))
-        // 2 slices (the q_stream_stats argument): complete-mode
-        // bucket COUNTS are order-insensitive over the same multiset,
-        // so the maintained-sketch property needs >1 trigger, not 4
-        val inDir = EventStreams.stagedParquet(ev, 2)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = stream
-          .select(posexplode(EventAnalytics.cmBuckets(col("user_id")))
-            .as(Seq("i", "bucket")))
-          .groupBy(col("i"), col("bucket"))
-          .agg(count(lit(1)).as("c"))
-          .writeStream.format("memory").queryName("graft_stream_cm")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_cm")
-      }
+         |FROM b GROUP BY 1, 2""".stripMargin) { (s, dir) =>
+      val ev = Tables.events(s, dir).select(col("user_id"))
+      // 2 slices (the q_stream_stats argument): complete-mode
+      // bucket COUNTS are order-insensitive over the same multiset,
+      // so the maintained-sketch property needs >1 trigger, not 4
+      val inDir = EventStreams.stagedParquet(ev, 2)
+      toMemory(slicedStream(s, ev.schema, inDir)
+        .select(posexplode(EventAnalytics.cmBuckets(col("user_id")))
+          .as(Seq("i", "bucket")))
+        .groupBy(col("i"), col("bucket"))
+        .agg(count(lit(1)).as("c")), "graft_stream_cm", "complete")
     },
 
     // CONTINUOUS top-k (leaderboard) over the event stream: per-user
@@ -348,7 +305,7 @@ object StreamingOps {
     // the only driver material is the k-row board — the shape of a
     // trending/heavy-hitter serve at firehose scale (q_stream_cm is
     // its approximate sketch-bounded cousin).
-    QueryDef.sql(
+    streamGate(
       "q_stream_topk",
       """WITH c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS cnt
         |           FROM events GROUP BY user_id),
@@ -356,31 +313,25 @@ object StreamingOps {
         |             CAST(row_number() OVER (ORDER BY cnt DESC, user_id)
         |                  AS INTEGER) AS rnk
         |      FROM c)
-        |SELECT user_id, cnt, rnk FROM r WHERE rnk <= 10""".stripMargin) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val k = 10
-        val ev = Tables.events(s, dir).select(col("user_id"))
-        // 3 slices, not 4 — and not 2: the board-merge exactness
-        // claim is about merging into a PREVIOUSLY-MERGED board, so
-        // the gate keeps two real merge steps (triggers 2 and 3)
-        val inDir = EventStreams.stagedParquet(ev, 3)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        var board = Array.empty[(Long, Long)]
-        val q = stream
-          .groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
-          .writeStream.outputMode("update")
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            board = topkBoardMerge(board.toSeq, batch, k)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        import s.implicits._
-        board.toSeq.toDF("user_id", "cnt")
-          .withColumn("rnk", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .orderBy(col("cnt").desc, col("user_id"))))
-      }
+        |SELECT user_id, cnt, rnk FROM r WHERE rnk <= 10""".stripMargin) { (s, dir) =>
+      val k = 10
+      val ev = Tables.events(s, dir).select(col("user_id"))
+      // 3 slices, not 4 — and not 2: the board-merge exactness
+      // claim is about merging into a PREVIOUSLY-MERGED board, so
+      // the gate keeps two real merge steps (triggers 2 and 3)
+      val inDir = EventStreams.stagedParquet(ev, 3)
+      var board = Array.empty[(Long, Long)]
+      drain(slicedStream(s, ev.schema, inDir)
+        .groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
+        .writeStream.outputMode("update")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          board = topkBoardMerge(board.toSeq, batch, k)
+        })
+      import s.implicits._
+      board.toSeq.toDF("user_id", "cnt")
+        .withColumn("rnk", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .orderBy(col("cnt").desc, col("user_id"))))
     },
 
     // The SAME ordered funnel as q_funnel, run as a REAL stateful
@@ -394,31 +345,18 @@ object StreamingOps {
     // three-pass aggregation produces — ONE shared oracle string, so
     // batch/stream agreement is structural (the sessionization
     // pattern).
-    QueryDef.sql("q_stream_funnel", EventAnalytics.funnelSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        import s.implicits._
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), col("ts_us"), col("event_id"),
-            col("event_type"))
-        // 2 slices (3 triggers), the funnel_tws trim applied to the
-        // fMGWS twin: journeys still straddle the slice boundary and
-        // the punctuation trigger, output hash-invariant to slicing.
-        // sf0.1 best-of-5 2.22 s at probe 0.45 (≈2.0 normalized) vs
-        // the r17 record's 2.39 at 0.41.
-        val inDir = EventStreams.timeSlicedDir(ev, nSlices = 2, gapUs = 1L)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = EventStreams.funnelStream(
-          stream.as[EventStreams.FunnelEvent])
-          .writeStream.format("memory").queryName("graft_stream_funnel")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_funnel")
-          .agg(count(lit(1)).as("n_users"),
-            count(col("s1")).as("n_signup"),
-            count(col("s2")).as("n_view_after_signup"),
-            count(col("s3")).as("n_purchase_after_view"))
-      }
+    streamGate("q_stream_funnel", EventAnalytics.funnelSql) { (s, dir) =>
+      import s.implicits._
+      val ev = Tables.events(s, dir)
+        .select(col("user_id"), col("ts_us"), col("event_id"),
+          col("event_type"))
+      // 2 slices (3 triggers), the funnel_tws trim applied to the
+      // fMGWS twin: journeys still straddle the slice boundary and
+      // the punctuation trigger, output hash-invariant to slicing.
+      val inDir = EventStreams.timeSlicedDir(ev, nSlices = 2, gapUs = 1L)
+      EventAnalytics.funnelCounts(toMemory(EventStreams.funnelStream(
+        slicedStream(s, ev.schema, inDir).as[EventStreams.FunnelEvent]),
+        "graft_stream_funnel", "append"))
     },
 
     // The funnel state machine on transformWithState — the second
@@ -428,37 +366,26 @@ object StreamingOps {
     // aggregation AND the fMGWS stream: a three-way agreement that
     // the state-API migration changes no output for the one-shot-
     // journey shape either.
-    QueryDef.sql("q_stream_funnel_tws", EventAnalytics.funnelSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        import s.implicits._
-        withRocksDbProvider(s) {
-          val ev = Tables.events(s, dir)
-            .select(col("user_id"), col("ts_us"), col("event_id"),
-              col("event_type"))
-          // 2 slices (3 triggers with punctuation), not the fMGWS
-          // twin's 4: the RocksDB provider pays a state-store
-          // commit/snapshot per trigger, so the per-trigger floor
-          // dominates this gate's cost — and slicing is output-
-          // invariant (timeSlicedDir keeps event-time order at any
-          // nSlices; the oracle hash is unchanged). Cross-batch
-          // state carry stays exercised: journeys still straddle the
-          // slice boundary and the punctuation trigger.
-          val inDir = EventStreams.timeSlicedDir(ev, nSlices = 2, gapUs = 1L)
-          val stream = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir)
-          val q = EventStreams.funnelStreamTws(
-            stream.as[EventStreams.FunnelEvent])
-            .writeStream.format("memory").queryName("graft_stream_funnel_tws")
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          s.table("graft_stream_funnel_tws")
-            .agg(count(lit(1)).as("n_users"),
-              count(col("s1")).as("n_signup"),
-              count(col("s2")).as("n_view_after_signup"),
-              count(col("s3")).as("n_purchase_after_view"))
-            // the memory sink outlives the conf restore: pin the rows
-            .localCheckpoint()
-        }
+    streamGate("q_stream_funnel_tws", EventAnalytics.funnelSql) { (s, dir) =>
+      import s.implicits._
+      withRocksDbProvider(s) {
+        val ev = Tables.events(s, dir)
+          .select(col("user_id"), col("ts_us"), col("event_id"),
+            col("event_type"))
+        // 2 slices (3 triggers with punctuation), not the fMGWS
+        // twin's 4: the RocksDB provider pays a state-store
+        // commit/snapshot per trigger, so the per-trigger floor
+        // dominates this gate's cost — and slicing is output-
+        // invariant (timeSlicedDir keeps event-time order at any
+        // nSlices; the oracle hash is unchanged). Cross-batch
+        // state carry stays exercised: journeys still straddle the
+        // slice boundary and the punctuation trigger.
+        val inDir = EventStreams.timeSlicedDir(ev, nSlices = 2, gapUs = 1L)
+        EventAnalytics.funnelCounts(toMemory(EventStreams.funnelStreamTws(
+          slicedStream(s, ev.schema, inDir).as[EventStreams.FunnelEvent]),
+          "graft_stream_funnel_tws", "append"))
+          // the memory sink outlives the conf restore: pin the rows
+          .localCheckpoint()
       }
     },
 
@@ -471,21 +398,14 @@ object StreamingOps {
     // the unrolled-Lloyd training + assignment CTE restricted to the
     // ingest slice — the same codebook the serve gates probe; the
     // spec additionally pins stream == ivfAssign on the same slice.
-    QueryDef.sql("q_stream_ivf_ingest", SimilarityOps.ivfIngestSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val emb = Tables(s, dir, "embeddings")
-        val centConst = SimilarityOps.gateCodebookConst(s, dir)
-        val stream = s.readStream.schema(emb.schema)
-          .parquet(EventStreams.streamableDir(s"$dir/embeddings.parquet"))
-          .filter(col("vec_id") % SimilarityOps.IvfIngestMod
-            === SimilarityOps.IvfIngestMod - 1)
-          .select(col("vec_id"), col("embedding").as("qv"))
-        val q = SimilarityOps.streamIvfIngest(stream, centConst)
-          .writeStream.format("memory").queryName("graft_stream_ivf_ingest")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_ivf_ingest")
-      }
+    streamGate("q_stream_ivf_ingest", SimilarityOps.ivfIngestSql) { (s, dir) =>
+      val centConst = SimilarityOps.gateCodebookConst(s, dir)
+      val stream = tableStream(s, dir, "embeddings")
+        .filter(col("vec_id") % SimilarityOps.IvfIngestMod
+          === SimilarityOps.IvfIngestMod - 1)
+        .select(col("vec_id"), col("embedding").as("qv"))
+      toMemory(SimilarityOps.streamIvfIngest(stream, centConst),
+        "graft_stream_ivf_ingest", "append")
     },
 
     // Streaming ANN serving against the STORED bucketed IVF index —
@@ -506,29 +426,24 @@ object StreamingOps {
     // q_sim_ivf_search — the trained-codebook serve family — so "the
     // stream serves exactly what the batch search computes" is
     // structural.
-    QueryDef.sql("q_stream_ann", SimilarityOps.ivfTrainedServeSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val emb = Tables(s, dir, "embeddings")
-        val centroids = SimilarityOps.gateCodebook(s, dir)
-        SimilarityOps.writeIvfIndex(emb, centroids, "graft_ivf_index", 8)
-        val centConst = SimilarityOps.gateCodebookConst(s, dir)
-        val outDir = java.nio.file.Files.createTempDirectory("graft_ann_out")
-        EventStreams.deleteRecursivelyOnExit(outDir)
-        val stream = s.readStream.schema(emb.schema)
-          .parquet(EventStreams.streamableDir(s"$dir/embeddings.parquet"))
-          .filter(col("vec_id") < SimilarityOps.NumProbes)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            SimilarityOps.annSearchStored(batch,
-              s.table("graft_ivf_index"), centConst,
-              SimilarityOps.NumProbeCells, SimilarityOps.TopK)
-              .write.mode("append").parquet(s"$outDir/answers")
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.read.parquet(s"$outDir/answers")
-      }
+    streamGate("q_stream_ann", SimilarityOps.ivfTrainedServeSql) { (s, dir) =>
+      val emb = Tables(s, dir, "embeddings")
+      val centroids = SimilarityOps.gateCodebook(s, dir)
+      SimilarityOps.writeIvfIndex(emb, centroids, "graft_ivf_index", 8)
+      val centConst = SimilarityOps.gateCodebookConst(s, dir)
+      val outDir = java.nio.file.Files.createTempDirectory("graft_ann_out")
+      EventStreams.deleteRecursivelyOnExit(outDir)
+      drain(tableStream(s, dir, "embeddings")
+        .filter(col("vec_id") < SimilarityOps.NumProbes)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+        .writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          SimilarityOps.annSearchStored(batch,
+            s.table("graft_ivf_index"), centConst,
+            SimilarityOps.NumProbeCells, SimilarityOps.TopK)
+            .write.mode("append").parquet(s"$outDir/answers")
+        })
+      s.read.parquet(s"$outDir/answers")
     },
 
     // The ingest→serve loop CLOSED (read-your-writes): the stored
@@ -546,34 +461,28 @@ object StreamingOps {
     // not retrain it mid-stream). The appended table's reads stay
     // exchange-free on the stored side (SourcesSpec pins this
     // post-append).
-    QueryDef.sql("q_stream_ann_after_ingest",
-      SimilarityOps.ivfTrainedServeSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val emb = Tables(s, dir, "embeddings")
-        val centroids = SimilarityOps.gateCodebook(s, dir)
-        val isIngest = col("vec_id") % SimilarityOps.IvfIngestMod ===
-          SimilarityOps.IvfIngestMod - 1
-        SimilarityOps.writeIvfIndex(emb.filter(!isIngest), centroids,
-          "graft_ivf_live", 8)
-        val centConst = SimilarityOps.gateCodebookConst(s, dir)
-        // multi-trigger ingest: several files, one append per trigger
-        val slice = emb.filter(isIngest).select(col("vec_id"), col("embedding"))
-        val inDir = EventStreams.stagedParquet(slice, 4)
-        val stream = s.readStream.schema(slice.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            SimilarityOps.appendIvfIndex(batch, centConst, "graft_ivf_live", 8)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        // serve against the UPDATED index — the appended vectors must
-        // be reachable candidates or the hashes cannot match
-        val probes = emb.filter(col("vec_id") < SimilarityOps.NumProbes)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-        SimilarityOps.annSearchStored(probes, s.table("graft_ivf_live"),
-          centConst, SimilarityOps.NumProbeCells, SimilarityOps.TopK)
-      }
+    streamGate("q_stream_ann_after_ingest",
+      SimilarityOps.ivfTrainedServeSql) { (s, dir) =>
+      val emb = Tables(s, dir, "embeddings")
+      val centroids = SimilarityOps.gateCodebook(s, dir)
+      val isIngest = col("vec_id") % SimilarityOps.IvfIngestMod ===
+        SimilarityOps.IvfIngestMod - 1
+      SimilarityOps.writeIvfIndex(emb.filter(!isIngest), centroids,
+        "graft_ivf_live", 8)
+      val centConst = SimilarityOps.gateCodebookConst(s, dir)
+      // multi-trigger ingest: several files, one append per trigger
+      val slice = emb.filter(isIngest).select(col("vec_id"), col("embedding"))
+      val inDir = EventStreams.stagedParquet(slice, 4)
+      drain(slicedStream(s, slice.schema, inDir).writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          SimilarityOps.appendIvfIndex(batch, centConst, "graft_ivf_live", 8)
+        })
+      // serve against the UPDATED index — the appended vectors must
+      // be reachable candidates or the hashes cannot match
+      val probes = emb.filter(col("vec_id") < SimilarityOps.NumProbes)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      SimilarityOps.annSearchStored(probes, s.table("graft_ivf_live"),
+        centConst, SimilarityOps.NumProbeCells, SimilarityOps.TopK)
     },
 
     // INCREMENTAL duplicate clustering — the streaming twin of
@@ -617,99 +526,94 @@ object StreamingOps {
     // cost falls with batch size while candidate generation stays an
     // equi-join probe on the stored layout (measured: the trimmed
     // ingest gates grow 1.3-2.0x at 10x rows, SCALE.md r16).
-    QueryDef.sql("q_stream_dedup_clusters", DedupOps.clusterClosureSql) {
-      (s, dir) => withStreamPartitions(s, 4) {
-        val docs = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("text"))
-        // the index is created lazily by the FIRST append
-        // (appendBucketed creates version 1 plus the pointer view
-        // when absent) — cheaper than bootstrapping an empty bucketed
-        // table; the drops keep re-runs in one session from probing a
-        // previous run's rows
-        graft.sources.Sources.dropVersioned(s, "graft_band_live")
-        graft.sources.Sources.dropVersioned(s, "graft_stars_live")
-        // 3 ingest slices, not 4 (r16 trigger-floor trim): each
-        // trigger pays the full append machinery (~1.0 s bucketed
-        // insert planning + swap + state write), so dropping one
-        // trigger removes ~a quarter of the gate's floor while
-        // keeping the property 2 slices would lose — trigger 3's
-        // probe reads an index holding the UNION of TWO prior
-        // appends (multi-file listing refresh across appends), not
-        // just one. Component labels are slicing-invariant (edge
-        // unions are order-independent), oracle hash unchanged.
-        val inDir = EventStreams.stagedParquet(docs, 3)
-        // per-trigger component state: a BUCKETED managed table keyed
-        // on the star root, replaced per trigger through
-        // swapBucketed's version-pointer flip — the new fixed point
-        // is derived FROM the old version and lands as numBuckets
-        // parallel sorted files, so state persistence scales with the
-        // cluster (a coalesce(1) file here would single-task billions
-        // of clustered rows at 100 TB) and a reader always resolves a
-        // complete fixed point through the pointer view
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        // "state table absent" is only legitimate before the FIRST
-        // swap: after that it means a failed swap was somehow
-        // swallowed, and restarting the components from empty would
-        // be a silent wrong answer — fail the trigger loudly instead
-        var stateSwapped = false
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            import Materialize.PinOps
-            require(!stateSwapped || s.catalog.tableExists("graft_stars_live"),
-              "component state table vanished after a successful swap")
-            val nbp = DedupOps.minhashBands(batch).pinned
-            // probe BEFORE append: cross-batch candidates against all
-            // PRIOR batches; within-batch pairs computed separately.
-            // Orientation is free (incrementalStars canonicalizes) —
-            // ingest slices carry no id-order guarantee. The explicit
-            // refresh drops the session's cached file listing for the
-            // table: this trigger must see every PRIOR trigger's
-            // append, not the listing cached at first read. No
-            // distinct on the probe: incrementalStars canonicalizes
-            // AND dedups the union — one shuffle instead of three.
-            val within = DedupOps.minhashBandPairs(nbp)
-            // the explicit refresh must run on THIS session: appends
-            // ran inside foreachBatch, whose batch session is a CLONE
-            // with its own relation cache — appendBucketed's own
-            // refresh invalidates the clone's listing, not the outer
-            // session's, and a stale listing here silently loses
-            // cross-batch candidates. Resolve through the pointer so
-            // the refresh hits the physical relation actually scanned.
-            val newEdges =
-              if (s.catalog.tableExists("graft_band_live")) {
-                s.catalog.refreshTable(
-                  graft.sources.Sources.physicalName(s, "graft_band_live"))
-                s.table("graft_band_live").as("x")
-                  .join(nbp.as("y"),
-                    col("x.band") === col("y.band") &&
-                      col("x.bucket") === col("y.bucket") &&
-                      col("x.doc_id") =!= col("y.doc_id"))
-                  .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-                  .union(within)
-              } else within // first trigger: nothing stored yet
-            val prev =
-              if (s.catalog.tableExists("graft_stars_live"))
-                s.table("graft_stars_live")
-              else within.filter(lit(false))
-            graft.sources.Sources.swapBucketed(
-              DedupOps.incrementalStars(prev, newEdges),
-              "graft_stars_live", Seq("a"), 8)
-            stateSwapped = true
-            // append the PINNED bands — the probe already computed
-            // them; re-banding the raw batch would run the whole
-            // shingle+hash pass a second time per trigger
-            DedupOps.appendBands(nbp, "graft_band_live", 8)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val finalStars =
-          if (s.catalog.tableExists("graft_stars_live"))
-            s.table("graft_stars_live")
-          else s.range(0).select(col("id").as("a"), col("id").as("b"))
-        DedupOps.labelAllDocs(docs,
-          finalStars.select(col("b").as("doc_id"), col("a").as("cluster_id")))
-      }
+    streamGate("q_stream_dedup_clusters", DedupOps.clusterClosureSql,
+      statePartitions = 4) { (s, dir) =>
+      val docs = Tables(s, dir, "documents")
+        .select(col("doc_id"), col("text"))
+      // the index is created lazily by the FIRST append
+      // (appendBucketed creates version 1 plus the pointer view
+      // when absent) — cheaper than bootstrapping an empty bucketed
+      // table; the drops keep re-runs in one session from probing a
+      // previous run's rows
+      graft.sources.Sources.dropVersioned(s, "graft_band_live")
+      graft.sources.Sources.dropVersioned(s, "graft_stars_live")
+      // 3 ingest slices, not 4 (a trigger-floor trim): each
+      // trigger pays the full append machinery (~1.0 s bucketed
+      // insert planning + swap + state write), so dropping one
+      // trigger removes ~a quarter of the gate's floor while
+      // keeping the property 2 slices would lose — trigger 3's
+      // probe reads an index holding the UNION of TWO prior
+      // appends (multi-file listing refresh across appends), not
+      // just one. Component labels are slicing-invariant (edge
+      // unions are order-independent), oracle hash unchanged.
+      val inDir = EventStreams.stagedParquet(docs, 3)
+      // per-trigger component state: a BUCKETED managed table keyed
+      // on the star root, replaced per trigger through
+      // swapBucketed's version-pointer flip — the new fixed point
+      // is derived FROM the old version and lands as numBuckets
+      // parallel sorted files, so state persistence scales with the
+      // cluster (a coalesce(1) file here would single-task billions
+      // of clustered rows at 100 TB) and a reader always resolves a
+      // complete fixed point through the pointer view
+      // "state table absent" is only legitimate before the FIRST
+      // swap: after that it means a failed swap was somehow
+      // swallowed, and restarting the components from empty would
+      // be a silent wrong answer — fail the trigger loudly instead
+      var stateSwapped = false
+      drain(slicedStream(s, docs.schema, inDir).writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          import Materialize.PinOps
+          require(!stateSwapped || s.catalog.tableExists("graft_stars_live"),
+            "component state table vanished after a successful swap")
+          val nbp = DedupOps.minhashBands(batch).pinned
+          // probe BEFORE append: cross-batch candidates against all
+          // PRIOR batches; within-batch pairs computed separately.
+          // Orientation is free (incrementalStars canonicalizes) —
+          // ingest slices carry no id-order guarantee. The explicit
+          // refresh drops the session's cached file listing for the
+          // table: this trigger must see every PRIOR trigger's
+          // append, not the listing cached at first read. No
+          // distinct on the probe: incrementalStars canonicalizes
+          // AND dedups the union — one shuffle instead of three.
+          val within = DedupOps.minhashBandPairs(nbp)
+          // the explicit refresh must run on THIS session: appends
+          // ran inside foreachBatch, whose batch session is a CLONE
+          // with its own relation cache — appendBucketed's own
+          // refresh invalidates the clone's listing, not the outer
+          // session's, and a stale listing here silently loses
+          // cross-batch candidates. Resolve through the pointer so
+          // the refresh hits the physical relation actually scanned.
+          val newEdges =
+            if (s.catalog.tableExists("graft_band_live")) {
+              s.catalog.refreshTable(
+                graft.sources.Sources.physicalName(s, "graft_band_live"))
+              s.table("graft_band_live").as("x")
+                .join(nbp.as("y"),
+                  col("x.band") === col("y.band") &&
+                    col("x.bucket") === col("y.bucket") &&
+                    col("x.doc_id") =!= col("y.doc_id"))
+                .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+                .union(within)
+            } else within // first trigger: nothing stored yet
+          val prev =
+            if (s.catalog.tableExists("graft_stars_live"))
+              s.table("graft_stars_live")
+            else within.filter(lit(false))
+          graft.sources.Sources.swapBucketed(
+            DedupOps.incrementalStars(prev, newEdges),
+            "graft_stars_live", Seq("a"), 8)
+          stateSwapped = true
+          // append the PINNED bands — the probe already computed
+          // them; re-banding the raw batch would run the whole
+          // shingle+hash pass a second time per trigger
+          DedupOps.appendBands(nbp, "graft_band_live", 8)
+        })
+      val finalStars =
+        if (s.catalog.tableExists("graft_stars_live"))
+          s.table("graft_stars_live")
+        else s.range(0).select(col("id").as("a"), col("id").as("b"))
+      DedupOps.labelAllDocs(docs,
+        finalStars.select(col("b").as("doc_id"), col("a").as("cluster_id")))
     },
 
     // The FULL stored-index lifecycle in one gate: ingest →
@@ -728,38 +632,32 @@ object StreamingOps {
     // additionally pins 1 file/bucket post-compact, identical probe
     // results before/after compaction, and appends continuing AFTER
     // a compaction staying probe-visible.
-    QueryDef.sql("q_stream_index_lifecycle", DedupOps.incrementalCandSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val docs = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("text"))
-        val existing = docs.filter(col("doc_id") < DedupOps.IncrementalSplit)
-        graft.sources.Sources.dropVersioned(s, "graft_band_lc")
-        // 2 ingest slices, not 4: each trigger is a full versioned
-        // append (write + pointer flip + stats bump), so the
-        // per-trigger floor is most of this gate's cost. Two appends
-        // still leave the table FRAGMENTED (2 files/bucket) so the
-        // compaction step keeps something real to do, and the
-        // candidate oracle is build-shape-invariant by construction.
-        val inDir = EventStreams.stagedParquet(existing, 2)
-        val stream = s.readStream.schema(existing.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            DedupOps.appendBandIndex(batch, "graft_band_lc", 8)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        // the maintenance pass a long-running ingest schedules off
-        // the serving path: back to one sorted file per bucket, then
-        // refresh the optimizer statistics of the rewritten artifact
-        // (approx-NDV mode — the 100 TB maintenance path) so the
-        // catalog the next probe plans against is current
-        graft.sources.Sources.compactBucketed(
-          s, "graft_band_lc", Seq("band", "bucket"), 8)
-        Analytics.analyzeTable(s, "graft_band_lc", exact = false)
-        DedupOps.incrementalCandidatePairsStored(s, "graft_band_lc",
-          docs.filter(col("doc_id") >= DedupOps.IncrementalSplit))
-      }
+    streamGate("q_stream_index_lifecycle", DedupOps.incrementalCandSql) { (s, dir) =>
+      val docs = Tables(s, dir, "documents")
+        .select(col("doc_id"), col("text"))
+      val existing = docs.filter(col("doc_id") < DedupOps.IncrementalSplit)
+      graft.sources.Sources.dropVersioned(s, "graft_band_lc")
+      // 2 ingest slices, not 4: each trigger is a full versioned
+      // append (write + pointer flip + stats bump), so the
+      // per-trigger floor is most of this gate's cost. Two appends
+      // still leave the table FRAGMENTED (2 files/bucket) so the
+      // compaction step keeps something real to do, and the
+      // candidate oracle is build-shape-invariant by construction.
+      val inDir = EventStreams.stagedParquet(existing, 2)
+      drain(slicedStream(s, existing.schema, inDir).writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          DedupOps.appendBandIndex(batch, "graft_band_lc", 8)
+        })
+      // the maintenance pass a long-running ingest schedules off
+      // the serving path: back to one sorted file per bucket, then
+      // refresh the optimizer statistics of the rewritten artifact
+      // (approx-NDV mode — the 100 TB maintenance path) so the
+      // catalog the next probe plans against is current
+      graft.sources.Sources.compactBucketed(
+        s, "graft_band_lc", Seq("band", "bucket"), 8)
+      Analytics.analyzeTable(s, "graft_band_lc", exact = false)
+      DedupOps.incrementalCandidatePairsStored(s, "graft_band_lc",
+        docs.filter(col("doc_id") >= DedupOps.IncrementalSplit))
     },
 
     // STREAMING manifest maintenance — the append-only half of
@@ -773,24 +671,18 @@ object StreamingOps {
     // oracle = the SAME plain box-filter string as q_manifest_skip,
     // so "incrementally-maintained manifest == one-shot manifest ==
     // no manifest at all" is structural.
-    QueryDef.sql("q_stream_manifest", ZOrder.manifestSkipSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val (laid, laidDir, mid) = ZOrder.manifestGateLayout(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_mani")
-        EventStreams.deleteRecursivelyOnExit(tmp)
-        val maniDir = s"$tmp/manifest" // per-run OUTPUT state, not staging
-        val stream = s.readStream.schema(laid.schema)
-          .option("maxFilesPerTrigger", "4")
-          .parquet(laidDir)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            graft.sources.Manifest.appendFiles(batch, ZOrder.ManifestCols,
-              maniDir, ZOrder.ManifestCols.head)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        ZOrder.manifestAnswer(s, laid, s.read.parquet(maniDir), mid)
-      }
+    streamGate("q_stream_manifest", ZOrder.manifestSkipSql) { (s, dir) =>
+      val (laid, laidDir, mid) = ZOrder.manifestGateLayout(s, dir)
+      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_mani")
+      EventStreams.deleteRecursivelyOnExit(tmp)
+      val maniDir = s"$tmp/manifest" // per-run OUTPUT state, not staging
+      drain(slicedStream(s, laid.schema, laidDir, filesPerTrigger = 4)
+        .writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          graft.sources.Manifest.appendFiles(batch, ZOrder.ManifestCols,
+            maniDir, ZOrder.ManifestCols.head)
+        })
+      ZOrder.manifestAnswer(s, laid, s.read.parquet(maniDir), mid)
     },
 
     // STREAMING per-source admission cap — the online enforcement of
@@ -804,28 +696,21 @@ object StreamingOps {
     // variant; this is the arrival-order decision a live ingest
     // makes.) The spec additionally pins a cap boundary falling
     // INSIDE a later micro-batch.
-    QueryDef.sql(
+    streamGate(
       "q_stream_source_cap",
       s"""SELECT source, doc_id, CAST(rnk AS INTEGER) AS rnk
          |FROM (SELECT source, doc_id,
          |        row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rnk
          |      FROM documents)
-         |WHERE rnk <= ${CurationOps.SourceCap}""".stripMargin) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        import s.implicits._
-        val docs = Tables(s, dir, "documents")
-          .select(col("source"), col("doc_id"))
-        val inDir = EventStreams.orderedSlicedDir(docs, "doc_id", 4)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = EventStreams.sourceCapStream(
-          stream.as[EventStreams.CapDoc], CurationOps.SourceCap)
-          .writeStream.format("memory").queryName("graft_stream_cap")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_cap")
-          .select(col("source"), col("doc_id"), col("rnk").cast("int").as("rnk"))
-      }
+         |WHERE rnk <= ${CurationOps.SourceCap}""".stripMargin) { (s, dir) =>
+      import s.implicits._
+      val docs = Tables(s, dir, "documents")
+        .select(col("source"), col("doc_id"))
+      val inDir = EventStreams.orderedSlicedDir(docs, "doc_id", 4)
+      toMemory(EventStreams.sourceCapStream(
+        slicedStream(s, docs.schema, inDir).as[EventStreams.CapDoc],
+        CurationOps.SourceCap), "graft_stream_cap", "append")
+        .select(col("source"), col("doc_id"), col("rnk").cast("int").as("rnk"))
     },
 
     QueryDef.sql("q_sessionize", sessionizeSql) {
@@ -844,30 +729,21 @@ object StreamingOps {
     // state store — the shape that survives unbounded keys; the
     // punctuation marker is the explicit log-rotation boundary a
     // production ingest emits to flush sessions at file close.
-    QueryDef.sql("q_stream_sessionize", sessionizeSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        import s.implicits._
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), col("ts_us"), col("event_id"))
-        // 2 slices (3 triggers): unlike the tws twin (whose A/B
-        // showed RocksDB row traffic dominates, so it keeps 4), the
-        // fMGWS store pays a real per-trigger floor here — sessions
-        // still span the slice boundary, hash unchanged. sf0.1
-        // best-of-5 2.17 s at probe 0.45 (≈2.0 normalized) vs the
-        // r17 record's 2.43 at 0.41.
-        val inDir = EventStreams.timeSlicedDir(
-          ev, nSlices = 2, gapUs = EventStreams.SessionGapUs)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = EventStreams.sessionizeStream(
-          stream.as[EventStreams.SessionEvent])
-          .writeStream.format("memory").queryName("graft_stream_sess")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_sess")
-          .select(col("user_id"), col("session_id"), col("start_us"),
-            col("end_us"), col("n_events"))
-      }
+    streamGate("q_stream_sessionize", sessionizeSql) { (s, dir) =>
+      import s.implicits._
+      val ev = Tables.events(s, dir)
+        .select(col("user_id"), col("ts_us"), col("event_id"))
+      // 2 slices (3 triggers): unlike the tws twin (where RocksDB
+      // row traffic dominates, so it keeps 4), the
+      // fMGWS store pays a real per-trigger floor here — sessions
+      // still span the slice boundary, hash unchanged.
+      val inDir = EventStreams.timeSlicedDir(
+        ev, nSlices = 2, gapUs = EventStreams.SessionGapUs)
+      toMemory(EventStreams.sessionizeStream(
+        slicedStream(s, ev.schema, inDir).as[EventStreams.SessionEvent]),
+        "graft_stream_sess", "append")
+        .select(col("user_id"), col("session_id"), col("start_us"),
+          col("end_us"), col("n_events"))
     },
 
     // CHECKPOINT-RESTART recovery as an ORACLE-CHECKED gate — the
@@ -892,26 +768,24 @@ object StreamingOps {
     // order. At 100 TB this is the property that makes the ingest
     // restartable at all: state and offsets resume from the store,
     // never from a corpus rescan.
-    QueryDef.sql("q_stream_restart", sessionizeSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), col("ts_us"), col("event_id"))
-        val (phase1Rows, all) = EventStreams.restartPhases(
-          s, ev, EventStreams.sessionizeStream) { sink =>
-          val n = sink.count()
-          // phase 1: only the early slice existed; closed sessions
-          // landed in the sink, open ones stayed in the state store
-          require(n > 0,
-            "restart gate: phase 1 emitted nothing — the boundary fell " +
-              "before any closed session and the recovery would be vacuous")
-          n
-        }
-        require(all.count() > phase1Rows,
-          "restart gate: phase 2 emitted nothing — no state or offsets " +
-            "were carried across the restart")
-        all.select(col("user_id"), col("session_id"), col("start_us"),
-          col("end_us"), col("n_events"))
+    streamGate("q_stream_restart", sessionizeSql) { (s, dir) =>
+      val ev = Tables.events(s, dir)
+        .select(col("user_id"), col("ts_us"), col("event_id"))
+      val (phase1Rows, all) = EventStreams.restartPhases(
+        s, ev, EventStreams.sessionizeStream) { sink =>
+        val n = sink.count()
+        // phase 1: only the early slice existed; closed sessions
+        // landed in the sink, open ones stayed in the state store
+        require(n > 0,
+          "restart gate: phase 1 emitted nothing — the boundary fell " +
+            "before any closed session and the recovery would be vacuous")
+        n
       }
+      require(all.count() > phase1Rows,
+        "restart gate: phase 2 emitted nothing — no state or offsets " +
+          "were carried across the restart")
+      all.select(col("user_id"), col("session_id"), col("start_us"),
+        col("end_us"), col("n_events"))
     },
 
     // The SAME sessionizer on Spark 4's transformWithState — the
@@ -925,34 +799,27 @@ object StreamingOps {
     // requires the RocksDB state store, so the gate pins the provider
     // for the run (and restores it), doubling as the RocksDB path's
     // gate-level exercise.
-    QueryDef.sql("q_stream_sessionize_tws", sessionizeSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        import s.implicits._
-        withRocksDbProvider(s) {
-          val ev = Tables.events(s, dir)
-            .select(col("user_id"), col("ts_us"), col("event_id"))
-          // stays at 4 slices DELIBERATELY: an A/B at nSlices=2
-          // measured no win (3.43 vs 3.45 best-of-N — this gate's
-          // cost is per-session RocksDB row traffic, which slicing
-          // does not change, unlike funnel_tws's one-row-per-user
-          // state where the per-trigger commit floor dominated), so
-          // the richer 4-slice cross-batch session shape is free.
-          val inDir = EventStreams.timeSlicedDir(
-            ev, nSlices = 4, gapUs = EventStreams.SessionGapUs)
-          val stream = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir)
-          val q = EventStreams.sessionizeStreamTws(
-            stream.as[EventStreams.SessionEvent])
-            .writeStream.format("memory").queryName("graft_stream_sess_tws")
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          s.table("graft_stream_sess_tws")
-            .select(col("user_id"), col("session_id"), col("start_us"),
-              col("end_us"), col("n_events"))
-            // the memory sink outlives the conf restore below: pin
-            // the rows so downstream reads don't re-plan the stream
-            .localCheckpoint()
-        }
+    streamGate("q_stream_sessionize_tws", sessionizeSql) { (s, dir) =>
+      import s.implicits._
+      withRocksDbProvider(s) {
+        val ev = Tables.events(s, dir)
+          .select(col("user_id"), col("ts_us"), col("event_id"))
+        // stays at 4 slices DELIBERATELY: nSlices=2 is no faster
+        // (this gate's cost is per-session RocksDB row traffic,
+        // which slicing does not change, unlike funnel_tws's
+        // one-row-per-user state where the per-trigger commit floor
+        // dominated), so the richer 4-slice cross-batch session
+        // shape is free.
+        val inDir = EventStreams.timeSlicedDir(
+          ev, nSlices = 4, gapUs = EventStreams.SessionGapUs)
+        toMemory(EventStreams.sessionizeStreamTws(
+          slicedStream(s, ev.schema, inDir).as[EventStreams.SessionEvent]),
+          "graft_stream_sess_tws", "append")
+          .select(col("user_id"), col("session_id"), col("start_us"),
+            col("end_us"), col("n_events"))
+          // the memory sink outlives the conf restore below: pin
+          // the rows so downstream reads don't re-plan the stream
+          .localCheckpoint()
       }
     },
 
@@ -967,42 +834,36 @@ object StreamingOps {
     // structural (each key changes once — the compacted-change-log
     // contract). At 100 TB the snapshot is the bucketed stored table
     // and each apply shuffles only its micro-batch.
-    QueryDef.sql("q_stream_merge", WarehouseOps.mergeSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val docs = Tables(s, dir, "documents")
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_merge")
-        EventStreams.deleteRecursivelyOnExit(tmp)
-        val v0 = s"$tmp/snap/0"
-        docs.select(col("doc_id"), lit("keep").as("op"),
-          col("text").as("payload"))
-          .write.mode("overwrite").parquet(v0)
-        // the version CHAIN derives from the batch id, not a driver
-        // var: batch N always reads snap/N and overwrites snap/N+1,
-        // so an at-least-once RE-DELIVERY of batch N re-reads the
-        // intact prior snapshot and idempotently rewrites the same
-        // next version (a mutable read-path var would have advanced
-        // past it and read-overwrite the SAME directory), and a
-        // checkpointed restart resumes mid-chain because the paths
-        // are a pure function of the ids the source replays
-        var lastApplied = 0L // final-read bookmark only, never a read path
-        val changes = WarehouseOps.gateChanges(docs)
-        val inDir = EventStreams.orderedSlicedDir(changes, "doc_id", 3)
-        val stream = s.readStream.schema(changes.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            WarehouseOps.mergeApplyCdc(
-                s.read.parquet(s"$tmp/snap/$id"), batch)
-              .write.mode("overwrite").parquet(s"$tmp/snap/${id + 1}")
-            lastApplied = math.max(lastApplied, id + 1)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.read.parquet(s"$tmp/snap/$lastApplied")
-          .select(col("doc_id"), col("op"),
-            md5(col("payload").cast("binary")).as("content_hash"),
-            length(col("payload")).cast("long").as("n_chars"))
-      }
+    streamGate("q_stream_merge", WarehouseOps.mergeSql) { (s, dir) =>
+      val docs = Tables(s, dir, "documents")
+      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_merge")
+      EventStreams.deleteRecursivelyOnExit(tmp)
+      val v0 = s"$tmp/snap/0"
+      docs.select(col("doc_id"), lit("keep").as("op"),
+        col("text").as("payload"))
+        .write.mode("overwrite").parquet(v0)
+      // the version CHAIN derives from the batch id, not a driver
+      // var: batch N always reads snap/N and overwrites snap/N+1,
+      // so an at-least-once RE-DELIVERY of batch N re-reads the
+      // intact prior snapshot and idempotently rewrites the same
+      // next version (a mutable read-path var would have advanced
+      // past it and read-overwrite the SAME directory), and a
+      // checkpointed restart resumes mid-chain because the paths
+      // are a pure function of the ids the source replays
+      var lastApplied = 0L // final-read bookmark only, never a read path
+      val changes = WarehouseOps.gateChanges(docs)
+      val inDir = EventStreams.orderedSlicedDir(changes, "doc_id", 3)
+      drain(slicedStream(s, changes.schema, inDir).writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          WarehouseOps.mergeApplyCdc(
+              s.read.parquet(s"$tmp/snap/$id"), batch)
+            .write.mode("overwrite").parquet(s"$tmp/snap/${id + 1}")
+          lastApplied = math.max(lastApplied, id + 1)
+        })
+      s.read.parquet(s"$tmp/snap/$lastApplied")
+        .select(col("doc_id"), col("op"),
+          md5(col("payload").cast("binary")).as("content_hash"),
+          length(col("payload")).cast("long").as("n_chars"))
     },
 
     // The SAME SCD2 derivation as q_scd2_history, run as a REAL
@@ -1014,28 +875,20 @@ object StreamingOps {
     // oracle hash-checks it row for row (ONE shared oracle string —
     // the sessionize/funnel pattern). The EventTimeTimeout path
     // flushes users who go quiet without punctuation (spec-pinned).
-    QueryDef.sql("q_stream_scd2", WarehouseOps.scd2Sql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        import s.implicits._
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), col("ts_us"), col("event_id"),
-            col("event_type"))
-        // 2 slices (3 triggers): version chains still straddle the
-        // slice boundary (valid_to closes in a later trigger than the
-        // open), output hash-invariant to slicing. sf0.1 best-of-5
-        // 2.31 s at probe 0.45 (≈2.1 normalized) vs the r17 record's
-        // 2.32 at 0.41 — the smallest of the three trims.
-        val inDir = EventStreams.timeSlicedDir(ev, nSlices = 2, gapUs = 1L)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = EventStreams.scd2Stream(stream.as[EventStreams.Scd2Event])
-          .writeStream.format("memory").queryName("graft_stream_scd2")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_scd2")
-          .select(col("user_id"), col("attr"), col("version"),
-            col("valid_from_us"), col("valid_to_us"), col("is_current"))
-      }
+    streamGate("q_stream_scd2", WarehouseOps.scd2Sql) { (s, dir) =>
+      import s.implicits._
+      val ev = Tables.events(s, dir)
+        .select(col("user_id"), col("ts_us"), col("event_id"),
+          col("event_type"))
+      // 2 slices (3 triggers): version chains still straddle the
+      // slice boundary (valid_to closes in a later trigger than the
+      // open), output hash-invariant to slicing.
+      val inDir = EventStreams.timeSlicedDir(ev, nSlices = 2, gapUs = 1L)
+      toMemory(EventStreams.scd2Stream(
+        slicedStream(s, ev.schema, inDir).as[EventStreams.Scd2Event]),
+        "graft_stream_scd2", "append")
+        .select(col("user_id"), col("attr"), col("version"),
+          col("valid_from_us"), col("valid_to_us"), col("is_current"))
     },
 
     // Spark's NATIVE session_window aggregation as a REAL streaming
@@ -1053,32 +906,24 @@ object StreamingOps {
     // dropped post-hoc by the start <= hi cut as belt-and-braces. The
     // second flush trigger gives the state store the batch AFTER the
     // watermark update in which to evict the final real sessions.
-    QueryDef.sql("q_stream_session_window", EventAnalytics.sessionWindowSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), col("ts_us"), col("event_id"))
-        val hi = ev.agg(max(col("ts_us"))).head().getLong(0)
-        // 2 data slices (the r16 trigger-floor trim, applied r18):
-        // cross-batch session state still exercises — sessions span
-        // the slice boundary — and the output is hash-invariant to
-        // slicing (the oracle is the batch aggregation). flushSlices
-        // stays 2: append-mode eviction needs the batch AFTER the
-        // watermark update. 6 → 4 triggers; sf0.1 best-of-5 2.53 s
-        // vs the r17 record's 3.33 (hash re-verified at sf0.01).
-        val inDir = EventStreams.timeSlicedDir(ev, nSlices = 2,
-          gapUs = EventStreams.SessionGapUs + 10000000L, flushSlices = 2)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = EventAnalytics.sessionWindowAggOnTime(
-          stream
-            .withColumn("event_time", timestamp_micros(col("ts_us")))
-            .withWatermark("event_time", "0 seconds"))
-          .writeStream.format("memory").queryName("graft_stream_sw")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table("graft_stream_sw")
-          .filter(col("session_start_us") <= hi)
-      }
+    streamGate("q_stream_session_window", EventAnalytics.sessionWindowSql) { (s, dir) =>
+      val ev = Tables.events(s, dir)
+        .select(col("user_id"), col("ts_us"), col("event_id"))
+      val hi = ev.agg(max(col("ts_us"))).head().getLong(0)
+      // 2 data slices (a trigger-floor trim):
+      // cross-batch session state still exercises — sessions span
+      // the slice boundary — and the output is hash-invariant to
+      // slicing (the oracle is the batch aggregation). flushSlices
+      // stays 2: append-mode eviction needs the batch AFTER the
+      // watermark update. 6 → 4 triggers.
+      val inDir = EventStreams.timeSlicedDir(ev, nSlices = 2,
+        gapUs = EventStreams.SessionGapUs + 10000000L, flushSlices = 2)
+      toMemory(EventAnalytics.sessionWindowAggOnTime(
+        slicedStream(s, ev.schema, inDir)
+          .withColumn("event_time", timestamp_micros(col("ts_us")))
+          .withWatermark("event_time", "0 seconds")),
+        "graft_stream_sw", "append")
+        .filter(col("session_start_us") <= hi)
     },
 
     // STREAMING HLL maintenance — the sketch-state cousin of
@@ -1092,25 +937,18 @@ object StreamingOps {
     // the batch exact counts — ONE oracle string shared with
     // q_sketch_hll, so "the stream's sketch meets the same accuracy
     // contract as the batch sketch" is structural.
-    QueryDef.sql("q_stream_hll", EventAnalytics.hllAuditSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val docs = Tables(s, dir, "documents")
-          .select(col("source"), col("doc_id"), col("text"))
-        // 2 slices: HLL register state is a per-register max over
-        // item hashes — order-insensitive, any slicing of the same
-        // multiset lands the same sketch (the q_stream_stats trim)
-        val inDir = EventStreams.orderedSlicedDir(docs, "doc_id", 2)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = stream.groupBy(col("source"))
-          .agg(hll_sketch_agg(md5(col("text").cast("binary"))).as("sk"))
-          .select(col("source"), hll_sketch_estimate(col("sk")).as("est"))
-          .writeStream.format("memory").queryName("graft_stream_hll")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        EventAnalytics.hllAudit(s.table("graft_stream_hll"),
-          Tables(s, dir, "documents"))
-      }
+    streamGate("q_stream_hll", EventAnalytics.hllAuditSql) { (s, dir) =>
+      val docs = Tables(s, dir, "documents")
+        .select(col("source"), col("doc_id"), col("text"))
+      // 2 slices: HLL register state is a per-register max over
+      // item hashes — order-insensitive, any slicing of the same
+      // multiset lands the same sketch (the q_stream_stats trim)
+      val inDir = EventStreams.orderedSlicedDir(docs, "doc_id", 2)
+      EventAnalytics.hllAudit(toMemory(slicedStream(s, docs.schema, inDir)
+        .groupBy(col("source"))
+        .agg(hll_sketch_agg(md5(col("text").cast("binary"))).as("sk"))
+        .select(col("source"), hll_sketch_estimate(col("sk")).as("est")),
+        "graft_stream_hll", "complete"), Tables(s, dir, "documents"))
     },
 
     // STREAMING Misra–Gries maintenance — the heavy-hitter cousin of
@@ -1121,38 +959,31 @@ object StreamingOps {
     // the guarantees survive by the same theorem). The audit body and
     // oracle are SHARED with q_sketch_freq, so "the stream's summary
     // meets the same guarantees as the batch summary" is structural.
-    QueryDef.sql("q_stream_freq", EventAnalytics.freqAuditSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val docs = Tables(s, dir, "documents")
-          .select(col("source"), col("doc_id"), col("text"))
-        // stays at 3 slices DELIBERATELY: an A/B at 2 measured no
-        // win (5.34 vs 5.53 — this gate's cost is the trigram MG
-        // sketch scan plus the audit's exact-side recount, both
-        // data-volume work that slicing does not change), so the
-        // extra merge-path trigger is free.
-        val inDir = EventStreams.orderedSlicedDir(docs, "doc_id", 3)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        // stateless repartition BEFORE the stateful aggregate: each
-        // trigger's slice is ONE file → one scan task, and the
-        // trigram explode + MG partial fold run in the partial-agg
-        // stage right above the scan — unspread, the gate's dominant
-        // CPU ran on one core per trigger (the foreachBatch gates get
-        // this from spread(); a direct streaming plan needs the
-        // explicit exchange). Raw rows shuffled are the slice's docs
-        // (~KBs); state partitioning (the stateful exchange) is
-        // unchanged, so the MG merge tree and its guarantees are too.
-        val q = stream.repartition(s.sparkContext.defaultParallelism)
-          .groupBy(col("source"))
-          .agg(graft.functions.FrequentItems
-            .sketch(s, EventAnalytics.trigrams(s, col("text")),
-                EventAnalytics.FreqK).as("mg"))
-          .writeStream.format("memory").queryName("graft_stream_freq")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        EventAnalytics.freqAudit(s.table("graft_stream_freq"),
-          Tables(s, dir, "documents"))
-      }
+    streamGate("q_stream_freq", EventAnalytics.freqAuditSql) { (s, dir) =>
+      val docs = Tables(s, dir, "documents")
+        .select(col("source"), col("doc_id"), col("text"))
+      // stays at 3 slices DELIBERATELY: 2 slices are no faster
+      // (this gate's cost is the trigram MG sketch scan plus the
+      // audit's exact-side recount, both data-volume work that
+      // slicing does not change), so the extra merge-path trigger
+      // is free.
+      val inDir = EventStreams.orderedSlicedDir(docs, "doc_id", 3)
+      // stateless repartition BEFORE the stateful aggregate: each
+      // trigger's slice is ONE file → one scan task, and the
+      // trigram explode + MG partial fold run in the partial-agg
+      // stage right above the scan — unspread, the gate's dominant
+      // CPU ran on one core per trigger (the foreachBatch gates get
+      // this from spread(); a direct streaming plan needs the
+      // explicit exchange). Raw rows shuffled are the slice's docs
+      // (~KBs); state partitioning (the stateful exchange) is
+      // unchanged, so the MG merge tree and its guarantees are too.
+      EventAnalytics.freqAudit(toMemory(slicedStream(s, docs.schema, inDir)
+        .repartition(s.sparkContext.defaultParallelism)
+        .groupBy(col("source"))
+        .agg(graft.functions.FrequentItems
+          .sketch(s, EventAnalytics.trigrams(s, col("text")),
+              EventAnalytics.FreqK).as("mg")),
+        "graft_stream_freq", "complete"), Tables(s, dir, "documents"))
     },
 
     // STREAMING AMS maintenance — the F2/self-join-size statistic
@@ -1164,28 +995,20 @@ object StreamingOps {
     // deterministic, stream == batch is value-for-value, not
     // flag-level. This is the optimizer-statistics feed: join-size
     // estimates that are always current without rescanning history.
-    QueryDef.sql("q_stream_ams", EventAnalytics.amsAuditSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val ev = Tables.events(s, dir)
-          .select(col("event_type"), col("user_id"))
-        // 2 slices, not 4: the sign-sum state is types × 64 bigints
-        // (the cheapest in this file), so the gate's cost is almost
-        // pure per-trigger floor; complete-mode SUM aggregation is
-        // slicing-invariant, hash unchanged. Still multi-batch —
-        // the stream-maintains-the-sketch property needs >1 trigger,
-        // not 4.
-        val inDir = EventStreams.stagedParquet(ev, 2)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val zs = EventAnalytics.amsZSums
-        val q = stream.groupBy(col("event_type"))
-          .agg(zs.head, zs.tail: _*)
-          .writeStream.format("memory").queryName("graft_stream_ams")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        EventAnalytics.amsAudit(s.table("graft_stream_ams"),
-          Tables.events(s, dir))
-      }
+    streamGate("q_stream_ams", EventAnalytics.amsAuditSql) { (s, dir) =>
+      val ev = Tables.events(s, dir)
+        .select(col("event_type"), col("user_id"))
+      // 2 slices, not 4: the sign-sum state is types × 64 bigints
+      // (the cheapest in this file), so the gate's cost is almost
+      // pure per-trigger floor; complete-mode SUM aggregation is
+      // slicing-invariant, hash unchanged. Still multi-batch —
+      // the stream-maintains-the-sketch property needs >1 trigger,
+      // not 4.
+      val inDir = EventStreams.stagedParquet(ev, 2)
+      val zs = EventAnalytics.amsZSums
+      EventAnalytics.amsAudit(toMemory(slicedStream(s, ev.schema, inDir)
+        .groupBy(col("event_type")).agg(zs.head, zs.tail: _*),
+        "graft_stream_ams", "complete"), Tables.events(s, dir))
     },
 
     // STREAMING drift monitor — the two-proportion composition screen
@@ -1198,23 +1021,17 @@ object StreamingOps {
     // production the midpoint constant generalizes to "reference
     // window vs current window" with the reference counts loaded as
     // a static side.
-    QueryDef.sql("q_stream_drift", EventAnalytics.driftSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val ev = Tables.events(s, dir)
-          .select(col("event_type"), col("ts_us"))
-        val mm = ev.agg(min(col("ts_us")) + max(col("ts_us")))
-          .head().getLong(0) // bounded 1-row scalar: the split constant
-        // 2 slices: complete-mode half-counts are order-insensitive
-        // sums — the q_stream_stats trim argument
-        val inDir = EventStreams.stagedParquet(ev, 2)
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val q = EventAnalytics.driftHalfCounts(stream, lit(mm))
-          .writeStream.format("memory").queryName("graft_stream_drift")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        EventAnalytics.driftFlags(s.table("graft_stream_drift"))
-      }
+    streamGate("q_stream_drift", EventAnalytics.driftSql) { (s, dir) =>
+      val ev = Tables.events(s, dir)
+        .select(col("event_type"), col("ts_us"))
+      val mm = ev.agg(min(col("ts_us")) + max(col("ts_us")))
+        .head().getLong(0) // bounded 1-row scalar: the split constant
+      // 2 slices: complete-mode half-counts are order-insensitive
+      // sums — the q_stream_stats trim argument
+      val inDir = EventStreams.stagedParquet(ev, 2)
+      EventAnalytics.driftFlags(toMemory(EventAnalytics.driftHalfCounts(
+        slicedStream(s, ev.schema, inDir), lit(mm)),
+        "graft_stream_drift", "complete"))
     },
 
     // STREAMING ANALYZE — live optimizer statistics: the q_table_stats
@@ -1225,45 +1042,38 @@ object StreamingOps {
     // reads are always current without rescanning history; the audit
     // computes the exact NDV batch-side and hashes the 5% contract
     // flag next to the value-exact columns.
-    QueryDef.sql("q_stream_stats", streamStatsSql) {
-      (s, dir) => withStreamPartitions(s, 8) {
-        val o = Tables(s, dir, "orders")
-        // 2 slices, not 4: the state is ONE global row of
-        // count/min/max/HLL registers — order-insensitive (HLL
-        // register state is a per-register max over item hashes, so
-        // any slicing of the same multiset lands the same sketch)
-        // and the audit's exact columns are batch-side. The
-        // stream-maintains-stats property needs >1 trigger, not 4.
-        val inDir = EventStreams.stagedParquet(o, 2)
-        val stream = s.readStream.schema(o.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
-        val aggs = Analytics.StatsCols.flatMap { case (c, t) =>
-          val v = Analytics.statsVal(c, t)
-          Seq(count(v).as(s"nn_$c"),
-            min(v).cast("string").as(s"min_$c"),
-            max(v).cast("string").as(s"max_$c"),
-            hll_sketch_agg(v.cast("string")).as(s"sk_$c"))
-        }
-        val q = stream.groupBy()
-          .agg(count(lit(1)).as("n"), aggs: _*)
-          .writeStream.format("memory").queryName("graft_stream_stats")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val a = s.table("graft_stream_stats")
-        val exact = o.agg(count(lit(1)).as("xn"),
-          Analytics.StatsCols.map { case (c, t) =>
-            countDistinct(Analytics.statsVal(c, t)).as(s"xndv_$c")
-          }: _*)
-        a.crossJoin(broadcast(exact))
-          .select(explode(array(Analytics.StatsCols.map { case (c, _) =>
-            struct(lit(c).as("col_name"), col("n").as("n_rows"),
-              col(s"nn_$c").as("n_notnull"),
-              col(s"xndv_$c").as("ndv_exact"),
-              col(s"min_$c").as("min_val"), col(s"max_$c").as("max_val"),
-              (abs(hll_sketch_estimate(col(s"sk_$c")) - col(s"xndv_$c")) * 20
-                <= col(s"xndv_$c")).as("ndv_within_5pct"))
-          }: _*)).as("r")).select(col("r.*"))
+    streamGate("q_stream_stats", streamStatsSql) { (s, dir) =>
+      val o = Tables(s, dir, "orders")
+      // 2 slices, not 4: the state is ONE global row of
+      // count/min/max/HLL registers — order-insensitive (HLL
+      // register state is a per-register max over item hashes, so
+      // any slicing of the same multiset lands the same sketch)
+      // and the audit's exact columns are batch-side. The
+      // stream-maintains-stats property needs >1 trigger, not 4.
+      val inDir = EventStreams.stagedParquet(o, 2)
+      val aggs = Analytics.StatsCols.flatMap { case (c, t) =>
+        val v = Analytics.statsVal(c, t)
+        Seq(count(v).as(s"nn_$c"),
+          min(v).cast("string").as(s"min_$c"),
+          max(v).cast("string").as(s"max_$c"),
+          hll_sketch_agg(v.cast("string")).as(s"sk_$c"))
       }
+      val a = toMemory(slicedStream(s, o.schema, inDir).groupBy()
+        .agg(count(lit(1)).as("n"), aggs: _*),
+        "graft_stream_stats", "complete")
+      val exact = o.agg(count(lit(1)).as("xn"),
+        Analytics.StatsCols.map { case (c, t) =>
+          countDistinct(Analytics.statsVal(c, t)).as(s"xndv_$c")
+        }: _*)
+      a.crossJoin(broadcast(exact))
+        .select(explode(array(Analytics.StatsCols.map { case (c, _) =>
+          struct(lit(c).as("col_name"), col("n").as("n_rows"),
+            col(s"nn_$c").as("n_notnull"),
+            col(s"xndv_$c").as("ndv_exact"),
+            col(s"min_$c").as("min_val"), col(s"max_$c").as("max_val"),
+            (abs(hll_sketch_estimate(col(s"sk_$c")) - col(s"xndv_$c")) * 20
+              <= col(s"xndv_$c")).as("ndv_within_5pct"))
+        }: _*)).as("r")).select(col("r.*"))
     }
   )
 

@@ -3,7 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming over the `events` table: windowed aggregation
   * with watermarked late-data handling, and stateful gap-based
@@ -650,18 +652,12 @@ object EventStreams {
       java.nio.file.Files.setLastModifiedTime(dest,
         java.nio.file.Files.getLastModifiedTime(f.toPath))
     }
-    def phase(): Unit = {
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val q = sessionize(stream.as[SessionEvent](
+    def phase(): Unit = drain(
+      sessionize(slicedStream(s, ev.schema, inDir.toString).as[SessionEvent](
           org.apache.spark.sql.Encoders.product[SessionEvent]))
         .writeStream.format("parquet").option("path", outDir)
         .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        .outputMode("append"))
     val (early, late) = src.splitAt(1)
     arrive(early)
     phase()
@@ -871,16 +867,35 @@ object EventStreams {
       .toDF("source", "doc_id", "rnk")
   }
 
-  /** Drain the still-open sessions recorded in `state` after a run —
-    * exposed so tests can reconcile stream output with batch output. */
-  def runStreamToBatch(
-      spark: SparkSession,
-      input: Dataset[SessionEvent],
-      queryName: String): DataFrame = {
-    val q = sessionizeStream(input).writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+  /** The one run-and-drain policy for every stream in the build:
+    * start `writer` under [[Trigger.AvailableNow]], block until the
+    * input present at start is drained, and rethrow a failed query's
+    * error as the `StreamingQueryException` `awaitTermination` raises —
+    * a throwing foreachBatch body fails the caller, never returns a
+    * silently short result. */
+  def drain(writer: DataStreamWriter[_]): StreamingQuery = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    spark.table(queryName)
+    q
   }
+
+  /** [[drain]] `frame` into the memory sink `name` under output `mode`
+    * and return the sink as a table. Each run registers a fresh sink
+    * under `name`, so a re-run returns only its own rows. */
+  def toMemory(frame: Dataset[_], name: String, mode: String): DataFrame = {
+    drain(frame.writeStream.format("memory").queryName(name).outputMode(mode))
+    frame.sparkSession.table(name)
+  }
+
+  /** File stream over a staged slice dir: `filesPerTrigger` files per
+    * micro-batch, so a slicer's N files replay as N ordered triggers. */
+  def slicedStream(s: SparkSession, schema: StructType, dir: String,
+      filesPerTrigger: Int = 1): DataFrame =
+    s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(dir)
+
+  /** One-shot file stream over testdata table `table` under `dir`. */
+  def tableStream(s: SparkSession, dir: String, table: String): DataFrame =
+    s.readStream.schema(graft.Tables(s, dir, table).schema)
+      .parquet(streamableDir(s"$dir/$table.parquet"))
 }

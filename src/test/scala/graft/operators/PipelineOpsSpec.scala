@@ -778,6 +778,83 @@ class PipelineOpsSpec extends SparkSpec {
     assert(fin == Set((1L, 2L), (1L, 3L), (1L, 10L), (1L, 11L), (20L, 21L)))
   }
 
+  test("incremental stars: an IntegerType prior state falls back to the " +
+    "general path instead of crashing the local path's getLong") {
+    val prevInt = Seq((1, 2), (10, 11)).toDF("a", "b")
+    assert(prevInt.schema.forall(
+      _.dataType == org.apache.spark.sql.types.IntegerType))
+    val edges = Seq((3L, 2L), (3L, 10L)).toDF("a", "b")
+    def pairs(df: DataFrame): Set[(Long, Long)] = df.collect()
+      .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
+      .toSet
+    val general = pairs(DedupOps.incrementalStars(prevInt, edges,
+      localEdges = 0))
+    assert(general == Set((1L, 2L), (1L, 3L), (1L, 10L), (1L, 11L)))
+    assert(pairs(DedupOps.incrementalStars(prevInt, edges)) == general)
+  }
+
+  test("spread() re-probes a parquet file rewritten in place with the " +
+    "same length but a different row-group count") {
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    val parallelism = spark.sparkContext.defaultParallelism
+    val tmp = Files.createTempDirectory("graft_rg_rewrite")
+    // one uncompressed, dictionary-free part file per write, so the
+    // padded `note` value below adds its length byte for byte
+    def write(tag: String, pad: Int, opts: Map[String, String]): Path = {
+      val out = tmp.resolve(tag)
+      spark.range(2000).toDF("doc_id")
+        .withColumn("pad", lpad(col("doc_id").cast("string"), 200, "x"))
+        .withColumn("note", when(col("doc_id") === 0, "a")
+          .when(col("doc_id") === 1, "c")
+          .when(col("doc_id") === 2, lit("b" + "x" * pad))
+          .otherwise("b")) // the padded value is neither min nor max
+        .coalesce(1).write
+        .options(opts ++ Map("compression" -> "none",
+          "parquet.enable.dictionary" -> "false"))
+        .parquet(out.toString)
+      Files.list(out).iterator().asScala.find { p =>
+        val n = p.getFileName.toString
+        n.startsWith("part-") && n.endsWith(".parquet")
+      }.get
+    }
+    val multi = write("multi", 0,
+      Map("parquet.block.size" -> "4096", "parquet.page.size" -> "1024"))
+    val target = Files.size(multi)
+    // pad the single-row-group file up to exactly the multi file's
+    // length (a few rounds absorb varint-width steps in the footer)
+    var pad = 0
+    var single = write("single0", 0, Map.empty)
+    var rounds = 0
+    while (Files.size(single) != target && rounds < 6) {
+      pad += (target - Files.size(single)).toInt
+      assert(pad >= 0, "single-row-group fixture already longer than target")
+      rounds += 1
+      single = write(s"single$rounds", pad, Map.empty)
+    }
+    assert(Files.size(single) == target, "fixture lengths did not converge")
+    // a table dir of one file, with no .crc sidecar to go stale
+    val table = Files.createDirectories(tmp.resolve("table"))
+    val file = table.resolve("data.parquet")
+    Files.copy(single, file)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "16") // byte math alone claims plenty of splits
+      val before = spark.read.parquet(table.toString)
+      assert(DedupOps.spread(before).rdd.getNumPartitions == parallelism,
+        "single-row-group file must repartition")
+      val mtime = Files.getLastModifiedTime(file).toMillis
+      Files.copy(multi, file, StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(file,
+        java.nio.file.attribute.FileTime.fromMillis(mtime + 60000L))
+      assert(Files.size(file) == target)
+      val after = spark.read.parquet(table.toString)
+      assert(DedupOps.spread(after) eq after,
+        "spread() served the overwritten file's stale row-group count")
+    } finally spark.conf.set(key, prev)
+  }
+
   test("incremental stars: the bounded local path and the distributed " +
     "general path land the identical state") {
     // same planted rounds as above; localEdges = 0 forces the general

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.streaming.EventStreams.{drain, slicedStream, tableStream, toMemory}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming semantics: the stateful flatMapGroupsWithState
   * sessionizer must agree with the declarative batch sessionizer, and
@@ -36,7 +36,8 @@ class EventStreamsSpec extends SparkSpec {
 
     val input = MemoryStream[EventStreams.SessionEvent]
     input.addData(events)
-    val got = EventStreams.runStreamToBatch(spark, input.toDS(), "sess_test")
+    val got = toMemory(EventStreams.sessionizeStream(input.toDS()),
+      "sess_test", "append")
       .select($"user_id", $"session_id", $"start_us", $"end_us", $"n_events")
 
     val batch = EventStreams.sessionizeBatch(graft.Tables(spark, dir, "events"))
@@ -86,11 +87,7 @@ class EventStreamsSpec extends SparkSpec {
           org.apache.spark.sql.Dataset[EventStreams.SessionOut]) = {
       val input = MemoryStream[EventStreams.SessionEvent]
       input.addData(b1); input.addData(b2)
-      val q = f(input.toDS()).writeStream.format("memory")
-        .queryName(name).outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).collect()
+      toMemory(f(input.toDS()), name, "append").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
           r.getLong(4))).toSet
     }
@@ -125,7 +122,8 @@ class EventStreamsSpec extends SparkSpec {
     val input = MemoryStream[EventStreams.SessionEvent]
     input.addData(events)
     input.addData(flush) // second micro-batch: end-of-stream punctuation
-    val got = EventStreams.runStreamToBatch(spark, input.toDS(), "sess_punct")
+    val got = toMemory(EventStreams.sessionizeStream(input.toDS()),
+      "sess_punct", "append")
       .select($"user_id", $"session_id", $"start_us", $"end_us", $"n_events")
     val batch = EventStreams.sessionizeBatch(graft.Tables(spark, dir, "events"))
 
@@ -139,14 +137,9 @@ class EventStreamsSpec extends SparkSpec {
 
   test("windowed agg on a one-shot stream equals the batch computation") {
     val batchDf = EventStreams.windowedAgg(graft.Tables(spark, dir, "events"))
-    val schema = graft.Tables(spark, dir, "events").schema
-    val stream = spark.readStream.schema(schema)
-      .parquet(EventStreams.streamableDir(s"$dir/events.parquet"))
-    val q = EventStreams.windowedAgg(stream)
-      .writeStream.format("memory").queryName("win_test")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("win_test")
+    val streamed = toMemory(
+      EventStreams.windowedAgg(tableStream(spark, dir, "events")),
+      "win_test", "complete")
     assert(streamed.count() == batchDf.count())
     assert(streamed.exceptAll(batchDf).count() == 0)
     assert(batchDf.exceptAll(streamed).count() == 0)
@@ -283,13 +276,10 @@ class EventStreamsSpec extends SparkSpec {
 
   test("stream-static enrichment equals the batch join and keeps ZERO " +
     "streaming state") {
-    val schema = graft.Tables(spark, dir, "events").schema
-    val stream = spark.readStream.schema(schema)
-      .parquet(EventStreams.streamableDir(s"$dir/events.parquet"))
-    val q = EventStreams.enrichWithDim(stream, graft.Tables(spark, dir, "customer"))
+    val q = drain(EventStreams.enrichWithDim(tableStream(spark, dir, "events"),
+        graft.Tables(spark, dir, "customer"))
       .writeStream.format("memory").queryName("enrich_test")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      .outputMode("append"))
     // stateless: the dimension lookup must not allocate state stores
     val state = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
     assert(state.isEmpty, s"expected no state operators, got $state")
@@ -329,11 +319,8 @@ class EventStreamsSpec extends SparkSpec {
     input.addData(ev.filter(_.ts_us <= 100L))
     input.addData(ev.filter(_.ts_us > 100L))
     input.addData(punct)
-    val q = EventStreams.funnelStream(input.toDS())
-      .writeStream.format("memory").queryName("funnel_tie_test")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("funnel_tie_test").collect()
+    val got = toMemory(EventStreams.funnelStream(input.toDS()),
+        "funnel_tie_test", "append").collect()
       .map(r => r.getLong(0) ->
         ((Option(r.get(1)), Option(r.get(2)), Option(r.get(3)))))
       .toMap
@@ -372,11 +359,7 @@ class EventStreamsSpec extends SparkSpec {
       // u7's only event: a stage-less view (no prior signup)
       input.addData(Seq(EventStreams.FunnelEvent(7L, 1000L, 70L, "view")))
       input.addData(Seq(EventStreams.FunnelEvent(7L, 2000L, -1L, null)))
-      val q = f(input.toDS())
-        .writeStream.format("memory").queryName(tag)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(tag).collect()
+      toMemory(f(input.toDS()), tag, "append").collect()
         .map(r => r.getLong(0) ->
           ((Option(r.get(1)), Option(r.get(2)), Option(r.get(3))))).toMap
     }
@@ -411,11 +394,8 @@ class EventStreamsSpec extends SparkSpec {
       EventStreams.FunnelEvent(1L, 2000000L, 2L, "view"),
       EventStreams.FunnelEvent(2L, 1000000L, 3L, "view"))
     input.addData(EventStreams.FunnelEvent(2L, 20000000L, 4L, "view"))
-    val q = EventStreams.funnelStream(input.toDS(), quietUs = 5000000L)
-      .writeStream.format("memory").queryName("funnel_timeout_test")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.table("funnel_timeout_test").collect()
+    val rows = toMemory(EventStreams.funnelStream(input.toDS(),
+        quietUs = 5000000L), "funnel_timeout_test", "append").collect()
       .map(r => r.getLong(0) ->
         ((Option(r.get(1)), Option(r.get(2)), Option(r.get(3)))))
     assert(rows.count(_._1 == 1L) == 1,
@@ -441,11 +421,8 @@ class EventStreamsSpec extends SparkSpec {
     input.addData(EventStreams.FunnelEvent(2L, 20000000L, 2L, "view"))
     input.addData(EventStreams.FunnelEvent(1L, 30000000L, -1L, "punct"),
       EventStreams.FunnelEvent(2L, 60000000L, 3L, "view"))
-    val q = EventStreams.funnelStream(input.toDS(), quietUs = 5000000L)
-      .writeStream.format("memory").queryName("funnel_punct_after_timeout")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val u1 = spark.table("funnel_punct_after_timeout").collect()
+    val u1 = toMemory(EventStreams.funnelStream(input.toDS(),
+        quietUs = 5000000L), "funnel_punct_after_timeout", "append").collect()
       .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)),
         Option(r.get(3)))).filter(_._1 == 1L)
     assert(u1.length == 1,
@@ -604,11 +581,8 @@ class EventStreamsSpec extends SparkSpec {
       assert(screen.queryExecution.analyzed.collectLeaves().exists(
         _.toString.contains("para_index_test")),
         screen.queryExecution.analyzed)
-      val q = screen
-        .writeStream.format("memory").queryName("screen_test")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val out = spark.table("screen_test").collect().map(_.getLong(0)).toSet
+      val out = toMemory(screen, "screen_test", "append").collect()
+        .map(_.getLong(0)).toSet
       assert(out == Set(10L, 12L))
       // the probe join's STORED side needs no exchange: its bucketed
       // layout replaces the shuffle (batch twin of the same join — the
@@ -744,14 +718,12 @@ class EventStreamsSpec extends SparkSpec {
     input.addData(ev.filter(_.ts_us <= 100L))
     input.addData(ev.filter(_.ts_us > 100L))
     input.addData(punct)
-    val q = EventStreams.scd2Stream(input.toDS())
-      .writeStream.format("memory").queryName("scd2_tie_test")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val out = toMemory(EventStreams.scd2Stream(input.toDS()),
+      "scd2_tie_test", "append")
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
         if (r.isNullAt(4)) -1L else r.getLong(4), r.getBoolean(5))
-    val got = spark.table("scd2_tie_test").collect().map(key).toSet
+    val got = out.collect().map(key).toSet
     assert(got == Set(
       (1L, "A", 1L, 10L, 130L, false),
       (1L, "B", 2L, 130L, 140L, false),
@@ -781,11 +753,8 @@ class EventStreamsSpec extends SparkSpec {
       EventStreams.Scd2Event(1L, 2000000L, 2L, "B"),
       EventStreams.Scd2Event(2L, 1000000L, 3L, "A"))
     input.addData(EventStreams.Scd2Event(2L, 20000000L, 4L, "A"))
-    val q = EventStreams.scd2Stream(input.toDS(), quietUs = 5000000L)
-      .writeStream.format("memory").queryName("scd2_timeout_test")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.table("scd2_timeout_test").collect()
+    val rows = toMemory(EventStreams.scd2Stream(input.toDS(),
+        quietUs = 5000000L), "scd2_timeout_test", "append").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         r.getBoolean(5)))
     // u1: the A->B change closed version 1 normally; the timeout then
@@ -833,11 +802,7 @@ class EventStreamsSpec extends SparkSpec {
           org.apache.spark.sql.Dataset[EventStreams.FunnelOut]) = {
       val input = MemoryStream[EventStreams.FunnelEvent]
       input.addData(b1); input.addData(b2)
-      val q = f(input.toDS()).writeStream.format("memory")
-        .queryName(name).outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).collect()
+      toMemory(f(input.toDS()), name, "append").collect()
         .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)),
           Option(r.get(3)))).toSet
     }
@@ -875,13 +840,10 @@ class EventStreamsSpec extends SparkSpec {
       // "hot" is heavy in both, the tail differs per batch
       input.addData(("s", Seq.fill(30)("hot") ++ (0 to 9).map("a" + _)))
       input.addData(("s", Seq.fill(20)("hot") ++ (0 to 9).map("b" + _)))
-      val q = input.toDS().toDF("source", "toks")
+      toMemory(input.toDS().toDF("source", "toks")
         .groupBy(col("source"))
-        .agg(graft.functions.FrequentItems.sketch(col("toks"), 4).as("mg"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).collect().map { r =>
+        .agg(graft.functions.FrequentItems.sketch(col("toks"), 4).as("mg")),
+        name, "complete").collect().map { r =>
         val mg = r.getStruct(1)
         val items = mg.getMap[String, Long](1)
         (r.getString(0), (mg.getLong(0), items.contains("hot")))
@@ -922,11 +884,8 @@ class EventStreamsSpec extends SparkSpec {
       input.addData(
         EventStreams.SessionEvent(1L, 9000000000L, -1L),
         EventStreams.SessionEvent(2L, 9000000000L, -1L))
-      val q = EventStreams.sessionizeStream(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).collect()
+      toMemory(EventStreams.sessionizeStream(input.toDS()), name, "append")
+        .collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
           r.getLong(4))).toSet
     }
@@ -980,19 +939,12 @@ class EventStreamsSpec extends SparkSpec {
     // fault-tolerant FILE sink, exactly as a production redeploy would
     val outDir = java.nio.file.Files
       .createTempDirectory("graft_cp_out").toString
-    def phase(): Unit = {
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-      val q = EventStreams.sessionizeStream(
-        stream.as[EventStreams.SessionEvent])
-        .writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    def phase(): Unit = drain(EventStreams.sessionizeStream(
+        slicedStream(spark, ev.schema, inDir).as[EventStreams.SessionEvent])
+      .writeStream.format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", cp)
+      .outputMode("append"))
     def read(): Array[(Long, Int, Long, Long, Long)] =
       spark.read.parquet(outDir).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
@@ -1138,18 +1090,15 @@ class EventStreamsSpec extends SparkSpec {
     // the same ordered-trigger delivery mechanism the gate uses
     val in = graft.streaming.EventStreams.customSlicedDir("late_spec",
       Seq(s1, s2, s3).map(_.toDF("user_id", "ts_us")))
-    val stream = spark.readStream.schema("user_id LONG, ts_us LONG")
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = stream
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "user_id LONG, ts_us LONG")
+    val got = toMemory(slicedStream(spark, schema, in)
       .withColumn("event_time", timestamp_micros(col("ts_us")))
       .withWatermark("event_time", "72 hours")
       .groupBy(window(col("event_time"), "1 day"))
       .agg(count(lit(1)).as("n"))
-      .select(unix_micros(col("window.start")).as("ws"), col("n"))
-      .writeStream.format("memory").queryName("late_bounds")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("late_bounds").collect()
+      .select(unix_micros(col("window.start")).as("ws"), col("n")),
+      "late_bounds", "append").collect()
       .map(r => (r.getLong(0) / day, r.getLong(1))).toMap
     // [d10,d11): on-time row + slice-2 late merge (NOT dropped), the
     // slice-3 row dropped -> 2. Emitted because end d11 <= final wm.
@@ -1217,5 +1166,65 @@ class EventStreamsSpec extends SparkSpec {
     assert(engineDrops == predicted,
       s"engine counted $engineDrops watermark-dropped state rows, the " +
         s"oracle rule predicts $predicted distinct dropped windows")
+  }
+
+  test("drain: a throwing foreachBatch body fails the caller with a " +
+    "StreamingQueryException, never a silently short result") {
+    // q_stream_dedup_clusters' "state table vanished" require() relies
+    // on this: a failed trigger must fail the gate
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[Long]
+    input.addData(1L, 2L, 3L)
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      drain(input.toDF().writeStream
+        .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+          require(false, "planted trigger failure")
+        })
+    }
+    val causes = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(causes.exists(c => Option(c.getMessage).exists(
+      _.contains("planted trigger failure"))), err)
+  }
+
+  test("toMemory: a re-run under the same sink name returns only the " +
+    "re-run's rows") {
+    // Bench and the perf harness run every stream gate several times
+    // per JVM under one fixed sink name
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    def run(rows: Seq[Long]): Set[Long] = {
+      val input = MemoryStream[Long]
+      input.addData(rows)
+      toMemory(input.toDF(), "rerun_test", "append")
+        .collect().map(_.getLong(0)).toSet
+    }
+    assert(run(Seq(1L, 2L)) == Set(1L, 2L))
+    assert(run(Seq(3L)) == Set(3L),
+      "the re-run's sink still holds the first run's rows")
+  }
+
+  test("one stream runner: Trigger.AvailableNow and awaitTermination " +
+    "appear in main code only inside EventStreams.drain") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"not the project root: ${root.getAbsolutePath}")
+    def sources(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) sources(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val hits = for {
+      f <- sources(root)
+      code = comment.replaceAllIn(
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"), "")
+      token <- Seq("Trigger.AvailableNow", "awaitTermination")
+      n = code.sliding(token.length).count(_ == token)
+      if n > 0
+    } yield (root.toPath.relativize(f.toPath).toString, token, n)
+    assert(hits.toSet == Set(
+      ("graft/streaming/EventStreams.scala", "Trigger.AvailableNow", 1),
+      ("graft/streaming/EventStreams.scala", "awaitTermination", 1)),
+      s"stream run skeleton outside EventStreams.drain: ${hits.mkString(", ")}")
   }
 }
